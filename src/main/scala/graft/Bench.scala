@@ -10,8 +10,7 @@ final case class BenchKRec(topic: String, partition: Int, offset: Long,
 
 object Bench {
 
-  /** The reference's own sample Kafka event — the ingest replays' one
-    * fixture (ADVICE r12: was inlined at two call sites). */
+  /** The reference's own sample Kafka event — the ingest replay's input. */
   private val SampleEventPath = "/root/reference/sample_kafka_event.json"
 
   private def deleteRecursively(p: java.nio.file.Path): Unit =
@@ -44,71 +43,26 @@ object Bench {
     (sec, err)
   }
 
-  /** Ingest throughput (VERDICT r8 #5): the reference's ONLY published
-    * performance contract is ingest — 10k records inside a 900 s Lambda
-    * timeout (lambda-kafka-to-s3-10k-SAM_template.yaml:13,29), a floor of
-    * 11.1 records/s. Replay that contract's shape through the real
-    * pipeline: `nBatches` micro-batches of `perBatch` Confluent-Avro
-    * envelope records (the reference's own sample event, replicated with
-    * fresh offsets) driven through `KafkaToParquet.runStream` — per batch:
-    * full Avro decode, whole-batch total+distinct counts, and the
-    * count-bearing single-file parquet write. Returns
-    * (records/s, total records); None when the reference fixture is
-    * absent (the metric is skipped, never faked). */
-  def ingestThroughput(spark: SparkSession,
-      perBatch: Int = 10000, nBatches: Int = 10): Option[(Double, Long)] = {
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(SampleEventPath)))
-      return None
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val base = ingest.Envelope.readEventJson(spark, SampleEventPath).collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getTimestamp(3),
-        r.getString(4), r.getAs[Array[Byte]](5), r.getAs[Array[Byte]](6)))
-    val stream = MemoryStream[BenchKRec]
-    val out = java.nio.file.Files.createTempDirectory("graft_bench_ingest")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_bench_ingest_ckpt")
-    // record batches are PRE-BUILT — driver-side Seq construction is
-    // setup, not pipeline throughput (ADVICE r12)
-    val batches = (0 until nBatches).map { b =>
-      val off = b.toLong * perBatch
-      (0 until perBatch).map { i =>
-        val (t, p, ts, tt, k, v) = base((i % base.length).toInt)
-        BenchKRec(t, p, off + i, ts, tt, k, v)
-      }
-    }
-    val q = pipeline.KafkaToParquet.runStream(
-      stream.toDF(), ingest.RatecardSchema.topic,
-      ingest.RatecardSchema.provider, out.toString, ckpt.toString,
-      "SRC_KEY_VAL",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-    val t0 = System.nanoTime()
-    try {
-      for (recs <- batches) {
-        stream.addData(recs)
-        // one addData + drain per round = one micro-batch = one Lambda
-        // invocation equivalent (decode + counts + single-file write)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val sec = (System.nanoTime() - t0) / 1e9
-    deleteRecursively(out); deleteRecursively(ckpt)
-    val total = perBatch.toLong * nBatches
-    Some((math.round(total / sec * 10) / 10.0, total))
-  }
-
-  /** Multi-topic CONCURRENT ingest (VERDICT r11 #5): the reference's
-    * actual deployment shape is 11 event-source mappings feeding one
-    * Lambda concurrently (configure_lambda_triggeres.sh:13-23); the
-    * single-topic replay above measures one mapping. Here `nTopics`
-    * independent checkpointed streams — each its own MemoryStream,
-    * subject (`{topic}-value` fixture), output dir, and checkpoint —
-    * run the full decode+counts+write pipeline in parallel threads, and
-    * the figure is TOTAL records over the concurrent wall. Returns
-    * (records/s, total records, nTopics); None without the reference
-    * fixture. */
-  def multiTopicThroughput(spark: SparkSession, nTopics: Int = 4,
-      perBatch: Int = 10000, nBatches: Int = 3): Option[(Double, Long, Int)] = {
+  /** Ingest throughput replay (VERDICT r8 #5, r11 #5): the reference's
+    * ONLY published performance contract is ingest — 10k records inside a
+    * 900 s Lambda timeout (lambda-kafka-to-s3-10k-SAM_template.yaml:13,29),
+    * a floor of 11.1 records/s — and its deployment shape is 11
+    * event-source mappings feeding one Lambda concurrently
+    * (configure_lambda_triggeres.sh:13-23). Replays that shape through the
+    * real pipeline: `nTopics` independent checkpointed streams — each its
+    * own MemoryStream, subject (`{topic}-value` fixture), output dir and
+    * checkpoint — each fed `nBatches` micro-batches of `perBatch`
+    * Confluent-Avro envelope records (the reference's own sample event,
+    * replicated with fresh offsets) through `KafkaToParquet.runStream`
+    * from its own thread. Per batch: full Avro decode, whole-batch
+    * total+distinct counts, and the count-bearing single-file parquet
+    * write. The figure is TOTAL records over the concurrent wall, and
+    * every topic's lake is delivery-audited after the clock stops.
+    * Returns (records/s, total records, nTopics); None when the reference
+    * fixture is absent (the metric is skipped, never faked) or a stream
+    * failed its run or its audit. */
+  def multiTopicThroughput(spark: SparkSession, nTopics: Int,
+      perBatch: Int, nBatches: Int): Option[(Double, Long, Int)] = {
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(SampleEventPath)))
       return None
     import spark.implicits._
@@ -154,6 +108,8 @@ object Bench {
         val th = new Thread(() => {
           try {
             for (recs <- prebuilt(t)) {
+              // one addData + drain per round = one micro-batch = one
+              // Lambda invocation equivalent
               stream.addData(recs)
               q.processAllAvailable()
             }
@@ -168,7 +124,7 @@ object Bench {
       streamsAndQueries.foreach { case (_, _, q, _) =>
         try q.stop() catch { case _: Throwable => } }
       if (!failures.isEmpty) {
-        System.err.println(s"[bench] multi-topic ingest failed: " +
+        System.err.println(s"[bench] ingest replay (n=$nTopics) failed: " +
           failures.toArray.mkString("; "))
         return None
       }
@@ -180,7 +136,7 @@ object Bench {
         val landed = spark.read.option("recursiveFileLookup", "true")
           .parquet(s"$out/$t").count()
         if (landed != expected) {
-          System.err.println(s"[bench] multi-topic delivery mismatch: " +
+          System.err.println(s"[bench] ingest replay delivery mismatch: " +
             s"$t landed $landed of $expected")
           return None
         }
@@ -202,78 +158,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // lets v2 sources' reported KeyGroupedPartitioning drive planning
-      // (shuffle-free agg/join over graft.sources.GenDocs keyed scans)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // storage-partitioned joins whose join keys are a SUPERSET of the
-      // partition keys (q438: join on (tag,id), scans keyed on tag) are
-      // gated by this co-partition check; relaxing it lets the reported
-      // KeyGroupedPartitioning + SupportsReportOrdering plan the join
-      // with zero Exchange and zero Sort. Plan-choice only, never results.
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // V2 catalog plugins bound at SESSION BUILD (ADVICE r12: q459/q460
-      // used to set graftfns inside their query builders and never
-      // restore it — an order-dependent side effect; harness-wide binding
-      // makes every entry see the same catalog state). Plugins are
-      // instantiated lazily on first reference, so unused runs pay nothing.
-      .config("spark.sql.catalog.graftfns",
-        "graft.functions.GraftFunctionCatalog")
-      .config("spark.sql.catalog.graftlake",
-        "graft.sources.GraftRowCatalog")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR") // keep stdout clean for the metric line
     // Bench times the incremental entries (q170/q177) in their production
     // shape — ONE batch against a prebuilt index — not the 3-wave
     // equivalence replay Verify compares against the oracle (VERDICT r6
     // #6: the replay is a demo loop and was the bench tail every round).
     spark.conf.set("spark.graft.bench.singleWave", "true")
-    // SPARK_GRAFT_MT_ONLY=1,4,8,11 runs JUST the multi-topic concurrent
-    // ingest curve at the named widths and exits — the profiling knob
-    // behind the n=4→11 sublinearity analysis (VERDICT r13 #6): sweep
-    // widths × SPARK_GRAFT_CPUS without paying the 475-entry catalog.
-    sys.env.get("SPARK_GRAFT_MT_ONLY").foreach { spec =>
-      val widths = spec.split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt)
-      val curve = widths.flatMap { n =>
-        try multiTopicThroughput(spark, nTopics = n)
-          .map { case (rps, tot, _) => n -> (rps, tot) }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] mt n=$n failed: ${e.getMessage}")
-          None
-        }
-      }
-      val json = curve.map { case (n, (rps, _)) =>
-        jsonStr(n.toString) + ":" + rps }.mkString("{", ",", "}")
-      println(s"""{"metric":"multi_topic_curve","cpus":"$cpus","curve":$json}""")
-      spark.stop()
-      sys.exit(0)
-    }
-    // SPARK_GRAFT_INGEST_ONLY=n runs JUST the single-topic ingest replay
-    // n times and exits — the A/B knob behind the r16→r17 ingest-trend
-    // investigation (VERDICT r16 #3): the contract metric normally runs
-    // once per full 491-entry bench, far too slow to A/B across
-    // commits. Run 1 is the warm-up; read the medians of runs 2+.
-    sys.env.get("SPARK_GRAFT_INGEST_ONLY").foreach { spec =>
-      val n = math.max(1, spec.toInt)
-      val runs = (1 to n).flatMap { _ =>
-        try ingestThroughput(spark).map(_._1)
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] ingest failed: ${e.getMessage}")
-          None
-        }
-      }
-      println(s"""{"metric":"ingest_only","cpus":"$cpus","runs":${
-        runs.mkString("[", ",", "]")}}""")
-      spark.stop()
-      sys.exit(0)
-    }
     // Untimed warmup: absorb JIT/codegen/first-scan costs so per-query
     // numbers reflect steady-state execution, then run in catalog order.
     try SparkEntry.queries("q01_counts")(spark, sfDir).count()
@@ -368,33 +259,28 @@ object Bench {
     // best should track closely; a large gap flags a contended window
     val isoBestR = math.round(
       isolatedTriples.map(_._2.min).sum * 1000) / 1000.0
-    // Ingest replay AFTER the catalog passes (it shares the JVM; its
+    // Ingest replays AFTER the catalog passes (they share the JVM; their
     // cost must not contaminate per-entry numbers). Skipped under
     // SPARK_GRAFT_ONLY (an entry-scoped run wants entry numbers only).
-    val ingestTp: Option[(Double, Long)] =
-      if (only.isDefined) None
-      else try ingestThroughput(spark)
+    // First the single-topic contract shape (one stream, 10 batches of
+    // 10k), then the N-topic concurrent replay at the reference's ACTUAL
+    // deployment widths (VERDICT r12 #5: configure_lambda_triggeres.sh
+    // registers 11 event-source mappings; 4 alone understates the
+    // amortization claim) — the 4 → 8 → 11 scaling curve. Every point is
+    // delivery-audited; the headline multi_topic_throughput is n=11.
+    def replay(nTopics: Int, nBatches: Int): Option[(Double, Long)] =
+      try multiTopicThroughput(spark, nTopics, perBatch = 10000, nBatches)
+        .map { case (rps, tot, _) => (rps, tot) }
       catch { case e: Throwable =>
-        System.err.println(s"[bench] ingest throughput failed: ${e.getMessage}")
+        System.err.println(
+          s"[bench] ingest replay (n=$nTopics) failed: ${e.getMessage}")
         None
       }
-    // N-topic concurrent replay at the reference's ACTUAL deployment
-    // widths (VERDICT r12 #5: configure_lambda_triggeres.sh registers 11
-    // event-source mappings; 4 alone understates the amortization claim)
-    // — the 4 → 8 → 11 scaling curve, each point delivery-audited. After
-    // the single-topic figure, same JVM, never overlapping the catalog
-    // pass. The headline multi_topic_throughput is the n=11 point.
+    val ingestTp: Option[(Double, Long)] =
+      if (only.isDefined) None else replay(1, nBatches = 10)
     val multiCurve: Seq[(Int, (Double, Long))] =
       if (only.isDefined) Seq.empty
-      else Seq(4, 8, 11).flatMap { n =>
-        try multiTopicThroughput(spark, nTopics = n)
-          .map { case (rps, tot, _) => n -> (rps, tot) }
-        catch { case e: Throwable =>
-          System.err.println(
-            s"[bench] multi-topic ingest (n=$n) failed: ${e.getMessage}")
-          None
-        }
-      }
+      else Seq(4, 8, 11).flatMap(n => replay(n, nBatches = 3).map(n -> _))
     val multiTp: Option[(Double, Long, Int)] =
       multiCurve.lastOption.map { case (n, (rps, tot)) => (rps, tot, n) }
     val errJson =

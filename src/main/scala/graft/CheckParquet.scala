@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.io.File
 
 /** A3/K5 parity: the reference's read-back verification utility
@@ -12,12 +11,7 @@ import java.io.File
 object CheckParquet {
   def main(args: Array[String]): Unit = {
     val target = args.headOption.getOrElse(".")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     sys.props.get("graft.kms.key")
       .foreach(graft.sources.S3Config.applySseKms(spark, _))

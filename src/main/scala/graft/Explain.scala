@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: prints the formatted physical plan of selected
   * catalog queries (or all) — used to audit pushdown (PushedFilters /
   * ReadSchema), broadcast vs shuffle joins, and WholeStageCodegen spans. */
@@ -9,31 +7,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // storage-partitioned joins whose join keys are a SUPERSET of the
-      // partition keys (q438: join on (tag,id), scans keyed on tag) are
-      // gated by this co-partition check; relaxing it lets the reported
-      // KeyGroupedPartitioning + SupportsReportOrdering plan the join
-      // with zero Exchange and zero Sort. Plan-choice only, never results.
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // V2 catalog plugins bound at SESSION BUILD (ADVICE r12: q459/q460
-      // used to set graftfns inside their query builders and never
-      // restore it — an order-dependent side effect; harness-wide binding
-      // makes every entry see the same catalog state). Plugins are
-      // instantiated lazily on first reference, so unused runs pay nothing.
-      .config("spark.sql.catalog.graftfns",
-        "graft.functions.GraftFunctionCatalog")
-      .config("spark.sql.catalog.graftlake",
-        "graft.sources.GraftRowCatalog")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.catalog
       .filter(q => names.isEmpty || names.contains(q.name))

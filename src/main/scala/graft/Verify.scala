@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,35 +9,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS): read as epoch-nano long
-      // (same total order; queries derive micro timestamps when needed).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // lets v2 sources' reported KeyGroupedPartitioning drive planning
-      // (shuffle-free agg/join over graft.sources.GenDocs keyed scans)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // storage-partitioned joins whose join keys are a SUPERSET of the
-      // partition keys (q438: join on (tag,id), scans keyed on tag) are
-      // gated by this co-partition check; relaxing it lets the reported
-      // KeyGroupedPartitioning + SupportsReportOrdering plan the join
-      // with zero Exchange and zero Sort. Plan-choice only, never results.
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // V2 catalog plugins bound at SESSION BUILD (ADVICE r12: q459/q460
-      // used to set graftfns inside their query builders and never
-      // restore it — an order-dependent side effect; harness-wide binding
-      // makes every entry see the same catalog state). Plugins are
-      // instantiated lazily on first reference, so unused runs pay nothing.
-      .config("spark.sql.catalog.graftfns",
-        "graft.functions.GraftFunctionCatalog")
-      .config("spark.sql.catalog.graftlake",
-        "graft.sources.GraftRowCatalog")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

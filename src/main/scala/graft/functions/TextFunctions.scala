@@ -50,14 +50,6 @@ object TextFunctions {
   def minhash(shingleCol: Column, seed: Int): Column =
     array_min(transform(shingleCol, s => md5(concat(lit(s"$seed|"), s))))
 
-  /** Full signature as individual columns sig_0..sig_{k-1}. */
-  def minhashSig(shingleCol: Column, k: Int): Seq[(String, Column)] =
-    (0 until k).map(i => s"sig_$i" -> minhash(shingleCol, i))
-
-  /** SQL text for the same signature component (DuckDB oracle side). */
-  def minhashSql(shinglesExpr: String, seed: Int): String =
-    s"list_min(list_transform($shinglesExpr, s -> md5('$seed|' || s)))"
-
   /** Cheaper k-signature family: hash each shingle ONCE with md5, then
     * derive component i as the min under a rotate-left-by-4i-hex-chars
     * reordering — each rotation is a distinct bijection of the 128-bit
@@ -178,10 +170,6 @@ object TextFunctions {
     val sh = j % 4
     s"(((instr('0123456789abcdef', substr($hashExpr, $pos, 1)) - 1) >> $sh) & 1)"
   }
-
-  /** ±1 contribution of one token's hash to simhash bit j (shared SQL). */
-  def simhashContribSql(hashExpr: String, j: Int): String =
-    s"(2 * ${simhashBitSql(hashExpr, j)} - 1)"
 
   /** Native Column form of [[hexSpanValSql]] (see HexSpanVal): one
     * codegen'd span walk instead of `len` instr∘substr expressions.

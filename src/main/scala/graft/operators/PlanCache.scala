@@ -4,13 +4,17 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** THE single contract point for operator-internal persists.
   *
-  * Several builders return LAZY frames whose plans reference an
+  * Several builders return frames whose plans reference a persisted
   * intermediate more than once (the LSH signature table, the sorted
-  * shingle-set frame, the centroid-assignment frame). The intermediate
-  * must stay persisted until the caller materializes the result, so the
-  * builder itself cannot unpersist it. Instead every such persist is
-  * registered here, and callers release them all in one call after
-  * materializing:
+  * shingle-set frame, the centroid-assignment frame). Most are lazy; the
+  * near-dup builders (`Dedup.minhashNearDupPairs`,
+  * `Dedup.incrementalNearDupStep`) are EAGER through the candidate stage:
+  * their broadcast gate (`pairsFitBroadcast`) runs `pairs.count()` at
+  * build time, which also materializes the persisted pair list. Either
+  * way the intermediate must stay persisted until the caller
+  * materializes the result, so the builder itself cannot unpersist it.
+  * Instead every such persist is registered here, and callers release
+  * them all in one call after materializing:
   *
   * {{{
   *   val pairs = Dedup.minhashNearDupPairs(docs, "doc_id", "text")

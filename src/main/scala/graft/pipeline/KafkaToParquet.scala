@@ -110,10 +110,27 @@ object KafkaToParquet {
       .parquet(s"$baseDir/$topic")
   }
 
+  /** The one streaming scaffold: a checkpointed `foreachBatch` stream
+    * that decodes each non-empty micro-batch and hands it to `sink`.
+    * Checkpointed offsets give the reference's at-least-once retry
+    * semantics (SURVEY.md §2.6). */
+  private def runDecoded(
+      records: DataFrame,
+      topic: String,
+      schemas: SchemaProvider,
+      checkpointDir: String,
+      trigger: Trigger)(sink: DataFrame => Unit): StreamingQuery =
+    records.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        if (!batch.isEmpty) sink(decodeRecords(batch, topic, schemas))
+      }
+      .start()
+
   /** Streaming wrapper: any streaming record frame (Kafka source or test
     * MemoryStream with the same columns) → micro-batch decode + the exact
-    * per-batch write contract via foreachBatch. Checkpointed offsets give
-    * the reference's at-least-once retry semantics (SURVEY.md §2.6). */
+    * per-batch write contract (`writeBatch`). */
   def runStream(
       records: DataFrame,
       topic: String,
@@ -122,17 +139,9 @@ object KafkaToParquet {
       checkpointDir: String,
       distinctKeyCol: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    records.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val decoded = decodeRecords(batch, topic, schemas)
-          writeBatch(decoded, topic, baseDir, distinctKeyCol)
-          ()
-        }
-      }
-      .start()
+    runDecoded(records, topic, schemas, checkpointDir, trigger) {
+      writeBatch(_, topic, baseDir, distinctKeyCol)
+    }
 
   /** The scale-path streaming sink: micro-batches append to the
     * partitioned lake layout (`writePartitionedLake` — parallel writers,
@@ -150,14 +159,7 @@ object KafkaToParquet {
       checkpointDir: String,
       eventTime: org.apache.spark.sql.Column,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    records.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val decoded = decodeRecords(batch, topic, schemas)
-          writePartitionedLake(decoded, baseDir, topic, eventTime)
-        }
-      }
-      .start()
+    runDecoded(records, topic, schemas, checkpointDir, trigger) {
+      writePartitionedLake(_, baseDir, topic, eventTime)
+    }
 }

@@ -3,35 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (guide: one session per suite;
-  * sharing across suites is fine since config is identical). */
+  * sharing across suites is fine since config is identical). Fixed at 4
+  * cores whatever `SPARK_GRAFT_CPUS` says, so partition-count-sensitive
+  * assertions read the same on every host. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Session.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // lets v2 sources' reported KeyGroupedPartitioning drive planning
-      // (shuffle-free agg/join over graft.sources.GenDocs keyed scans)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // storage-partitioned joins whose join keys are a SUPERSET of the
-      // partition keys (q438: join on (tag,id), scans keyed on tag) are
-      // gated by this co-partition check; relaxing it lets the reported
-      // KeyGroupedPartitioning + SupportsReportOrdering plan the join
-      // with zero Exchange and zero Sort. Plan-choice only, never results.
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // V2 catalog plugins bound at SESSION BUILD (ADVICE r12: q459/q460
-      // used to set graftfns inside their query builders and never
-      // restore it — an order-dependent side effect; harness-wide binding
-      // makes every entry see the same catalog state). Plugins are
-      // instantiated lazily on first reference, so unused runs pay nothing.
-      .config("spark.sql.catalog.graftfns",
-        "graft.functions.GraftFunctionCatalog")
-      .config("spark.sql.catalog.graftlake",
-        "graft.sources.GraftRowCatalog")
       // Force UnsafeExternalSorter to spill every 4096 rows: tiny local
       // test data never spills naturally, so buffer-reuse bugs in spill
       // readers (values retained across next()) would otherwise only

@@ -139,6 +139,66 @@ class StreamingSpec extends AnyFunSuite {
     assert(pruned.count() == 16)
   }
 
+  /** A two-field writer schema, so the stream runners can be driven on a
+    * host without the reference fixture. */
+  private val TinySchema =
+    """{"type":"record","name":"Tiny","fields":[
+      |{"name":"SRC_KEY_VAL","type":"string"},
+      |{"name":"SRC_COMMIT_DT_UTC","type":"string"}]}""".stripMargin
+
+  /** `n` Confluent-wire records (magic 0x00 + 4-byte schema id + Avro
+    * body) of [[TinySchema]] over 3 distinct keys. */
+  private def tinyRecs(topic: String, n: Int): Seq[KRec] = {
+    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+    val schema = new org.apache.avro.Schema.Parser().parse(TinySchema)
+    val writer = new GenericDatumWriter[GenericRecord](schema)
+    (0 until n).map { i =>
+      val out = new java.io.ByteArrayOutputStream()
+      out.write(Array[Byte](0, 0, 0, 0, 1))
+      val enc = org.apache.avro.io.EncoderFactory.get().binaryEncoder(out, null)
+      val r = new GenericData.Record(schema)
+      r.put("SRC_KEY_VAL", s"k${i % 3}")
+      r.put("SRC_COMMIT_DT_UTC", "2021-07-02 04:15:00")
+      writer.write(r, enc)
+      enc.flush()
+      KRec(topic, 0, i.toLong, new java.sql.Timestamp(0L), "CreateTime",
+        s"k${i % 3}".getBytes("UTF-8"), out.toByteArray)
+    }
+  }
+
+  test("runStream and runStreamToLake land fixture-free Confluent records") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.functions._
+    val topic = "tiny"
+    val schemas = new graft.ingest.FixtureSchemaProvider(Map(topic -> TinySchema))
+    val trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)
+    val (fileIn, lakeIn) = (MemoryStream[KRec], MemoryStream[KRec])
+    val out = Files.createTempDirectory("graft_tiny").toString
+    val lake = Files.createTempDirectory("graft_tiny_lake").toString
+    val q1 = KafkaToParquet.runStream(fileIn.toDF(), topic, schemas, out,
+      Files.createTempDirectory("graft_tiny_ckpt").toString, "SRC_KEY_VAL",
+      trigger)
+    val q2 = KafkaToParquet.runStreamToLake(lakeIn.toDF(), topic, schemas,
+      lake, Files.createTempDirectory("graft_tiny_lake_ckpt").toString,
+      to_timestamp(col("SRC_COMMIT_DT_UTC")), trigger)
+    try {
+      fileIn.addData(tinyRecs(topic, 6)); lakeIn.addData(tinyRecs(topic, 6))
+      q1.processAllAvailable(); q2.processAllAvailable()
+    } finally { q1.stop(); q2.stop() }
+
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    val files = walk(new java.io.File(out)).filter(_.getName.endsWith(".parquet"))
+    assert(files.size == 1, s"expected 1 batch file, got $files")
+    assert(files.head.getName.matches(raw"tiny_\d+\.\d{6}_6_3\.parquet"),
+      files.head.getName)
+    assert(spark.read.parquet(files.head.getPath).count() == 6)
+    assert(new java.io.File(
+      s"$lake/$topic/year=2021/month=07/day=02/hour=04").isDirectory)
+    assert(spark.read.parquet(s"$lake/$topic").count() == 6)
+  }
+
   /** DSv2 MicroBatchStream progress pin (VERDICT r11 #3): the gendocs
     * streaming read must pace micro-batches by the admission-control cap
     * — exact batch count, exact per-batch numInputRows, offsets in the
