@@ -54,9 +54,9 @@ object Bench {
     * checkpoint — each fed `nBatches` micro-batches of `perBatch`
     * Confluent-Avro envelope records (the reference's own sample event,
     * replicated with fresh offsets) through `KafkaToParquet.runStream`
-    * from its own thread. Per batch: full Avro decode, whole-batch
-    * total+distinct counts, and the count-bearing single-file parquet
-    * write. The figure is TOTAL records over the concurrent wall, and
+    * from its own thread. Per batch: full Avro decode and the single-file
+    * parquet write, whose observed total+distinct counts name the file at
+    * its rename. The figure is TOTAL records over the concurrent wall, and
     * every topic's lake is delivery-audited after the clock stops.
     * Returns (records/s, total records, nTopics); None when the reference
     * fixture is absent (the metric is skipped, never faked) or a stream

@@ -1,7 +1,7 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.ConfluentAvro.confluent_avro
@@ -11,7 +11,8 @@ import java.time.{Instant, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
 /** Result of one micro-batch write — the reference's v2 response body
-  * (lambda_function_with_AWS_datawrangler.py:218-224). */
+  * (lambda_function_with_AWS_datawrangler.py:218-224). `path` is empty
+  * when the batch had no rows and no file was written. */
 final case class BatchResult(path: String, totalRecords: Long, distinctRecords: Long)
 
 /** The reference pipeline re-expressed Spark-first (SURVEY.md §2.10):
@@ -47,9 +48,10 @@ object KafkaToParquet {
 
   private val epochFmt = DateTimeFormatter.ofPattern("yyyy/MM/dd/HH")
 
-  /** K1–K3 + F6/F7 + A1/A2: counts first (the filename needs them before
-    * the write — SURVEY.md §7.4), then a single parquet file at
+  /** K1–K3 + F6/F7 + A1/A2: a single parquet file at
     * {base}/{topic}/yyyy/MM/dd[/HH]/{topic}_{epochSeconds}[_{total}_{distinct}].parquet.
+    * The counts are observed on the write itself (one Spark job) and name
+    * the file at the rename after it. An empty batch writes no file.
     */
   def writeBatch(
       decoded: DataFrame,
@@ -59,43 +61,39 @@ object KafkaToParquet {
       now: Instant = Instant.now(),
       hourly: Boolean = true,
       countsInName: Boolean = true): BatchResult = {
-    val cached = decoded.cache()
-    try {
-      val (total, distinct) = {
-        val row = cached.agg(
-          count(lit(1)),
-          count_distinct(col(distinctKeyCol))).head()
-        (row.getLong(0), row.getLong(1))
-      }
-      val utc = now.atZone(ZoneOffset.UTC)
-      val datePart = epochFmt.format(utc)
-      val dir =
-        if (hourly) s"$baseDir/$topic/$datePart"
-        else s"$baseDir/$topic/${datePart.substring(0, 10)}"
-      val epoch = now.getEpochSecond + now.getNano / 1e9
-      val fileName =
-        if (countsInName) f"${topic}_$epoch%.6f_${total}_$distinct.parquet"
-        else f"${topic}_$epoch%.6f.parquet"
+    val datePart = epochFmt.format(now.atZone(ZoneOffset.UTC))
+    val dir = s"$baseDir/$topic/" + (if (hourly) datePart else datePart.take(10))
 
-      // One file per batch (reference: one parquet per invocation). Write to
-      // a staging dir, then move the single part file to the contract name —
-      // Hadoop FS API so the same code runs against s3a:// on a cluster.
-      val staging = s"$dir/.staging_${now.toEpochMilli}"
-      cached.coalesce(1).write.mode("overwrite").parquet(staging)
-      val conf = cached.sparkSession.sparkContext.hadoopConfiguration
-      val fs = FileSystem.get(new Path(staging).toUri, conf)
-      val part = fs.listStatus(new Path(staging))
+    // One file per batch (reference: one parquet per invocation): write to
+    // this call's own staging dir, then rename its part file to the contract
+    // name via the Hadoop FS API (s3a:// too). collect_set is exact and
+    // null-blind like count_distinct, and needs no exact-agg fallback: its
+    // keys sit in the one task coalesce(1) already uses, and the reference
+    // caps a batch at 10k records (SAM template).
+    val staging = new Path(s"$dir/.staging_${java.util.UUID.randomUUID()}")
+    val counts = Observation()
+    decoded.observe(counts, count(lit(1)).as("total"),
+        size(collect_set(col(distinctKeyCol))).as("distinct"))
+      .coalesce(1).write.parquet(staging.toString)
+    val observed = counts.get
+    val (total, distinct) = (observed("total").asInstanceOf[Long],
+      observed("distinct").asInstanceOf[Int].toLong)
+    val epoch = now.getEpochSecond + now.getNano / 1e9
+    val counted = if (countsInName) s"_${total}_$distinct" else ""
+    val target = new Path(f"$dir/${topic}_$epoch%.6f$counted.parquet")
+    val fs = staging.getFileSystem(decoded.sparkSession.sparkContext.hadoopConfiguration)
+    if (total > 0) {
+      val part = fs.listStatus(staging)
         .map(_.getPath).find(_.getName.startsWith("part-"))
         .getOrElse(throw new IllegalStateException(s"no part file in $staging"))
-      val target = new Path(s"$dir/$fileName")
       // A false rename (target exists, FS error) must fail the batch so the
       // checkpointed stream retries it — silently deleting staging would
       // lose the file while reporting success (at-least-once contract).
       if (!fs.rename(part, target))
         throw new java.io.IOException(s"rename $part -> $target failed")
-      fs.delete(new Path(staging), true)
-      BatchResult(target.toString, total, distinct)
-    } finally cached.unpersist()
+    }
+    fs.delete(staging, true)
+    BatchResult(if (total > 0) target.toString else "", total, distinct)
   }
 
   /** The scale path: event-time (or processing-time) partitioned lake
@@ -111,9 +109,9 @@ object KafkaToParquet {
   }
 
   /** The one streaming scaffold: a checkpointed `foreachBatch` stream
-    * that decodes each non-empty micro-batch and hands it to `sink`.
-    * Checkpointed offsets give the reference's at-least-once retry
-    * semantics (SURVEY.md §2.6). */
+    * that decodes each micro-batch, empty ones too (neither sink writes a
+    * data file for them), and hands it to `sink`. Checkpointed offsets give
+    * the reference's at-least-once retry semantics (SURVEY.md §2.6). */
   private def runDecoded(
       records: DataFrame,
       topic: String,
@@ -124,7 +122,7 @@ object KafkaToParquet {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) sink(decodeRecords(batch, topic, schemas))
+        sink(decodeRecords(batch, topic, schemas))
       }
       .start()
 

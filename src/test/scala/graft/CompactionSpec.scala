@@ -35,23 +35,23 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("writeBatch throws when the contract filename already exists (no silent loss)") {
-    assume(Files.exists(java.nio.file.Paths.get(
-      "/root/reference/sample_kafka_event.json")))
-    val out = Files.createTempDirectory("graft_wb_dup").toString
-    val recs = Envelope.readEventJson(
-      spark, "/root/reference/sample_kafka_event.json")
-    val decoded = KafkaToParquet.decodeRecords(
-      recs, RatecardSchema.topic, RatecardSchema.provider)
-    val at = Instant.parse("2021-09-02T18:00:00.000Z")
-    val first = KafkaToParquet.writeBatch(
-      decoded, RatecardSchema.topic, out, "SRC_KEY_VAL", at)
     // same instant → same contract filename → rename must fail loudly,
     // leaving the first file untouched
-    intercept[java.io.IOException] {
-      KafkaToParquet.writeBatch(
-        decoded, RatecardSchema.topic, out, "SRC_KEY_VAL", at)
+    def check(decoded: org.apache.spark.sql.DataFrame, topic: String, rows: Long): Unit = {
+      val out = Files.createTempDirectory("graft_wb_dup").toString
+      val at = Instant.parse("2021-09-02T18:00:00.000Z")
+      val first = KafkaToParquet.writeBatch(decoded, topic, out, "SRC_KEY_VAL", at)
+      intercept[java.io.IOException] {
+        KafkaToParquet.writeBatch(decoded, topic, out, "SRC_KEY_VAL", at)
+      }
+      assert(spark.read.parquet(first.path).count() == rows)
     }
-    assert(spark.read.parquet(first.path).count() == 16)
+    val batch = IngestSpec.genBatch(spark, 40)
+    check(batch, "gen", IngestSpec.sqlCounts(spark, batch)._1)
+    val sample = "/root/reference/sample_kafka_event.json"
+    if (Files.exists(java.nio.file.Paths.get(sample)))
+      check(KafkaToParquet.decodeRecords(Envelope.readEventJson(spark, sample),
+        RatecardSchema.topic, RatecardSchema.provider), RatecardSchema.topic, 16)
   }
 
   test("compactPartition refuses to run over a stale backup and keeps data intact") {
