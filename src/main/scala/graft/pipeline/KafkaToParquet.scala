@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.ConfluentAvro.confluent_avro
 import graft.ingest.{Decoders, SchemaProvider}
+import graft.io.LocalFs
 
 import java.time.{Instant, ZoneOffset}
 import java.time.format.DateTimeFormatter
@@ -52,6 +53,9 @@ object KafkaToParquet {
     * {base}/{topic}/yyyy/MM/dd[/HH]/{topic}_{epochSeconds}[_{total}_{distinct}].parquet.
     * The counts are observed on the write itself (one Spark job) and name
     * the file at the rename after it. An empty batch writes no file.
+    * The write binds `file:` to [[graft.io.LocalFs]] through its options:
+    * without libhadoop, Hadoop's own local FS forks a `chmod` per create
+    * and mkdir, 9 per batch.
     */
   def writeBatch(
       decoded: DataFrame,
@@ -74,7 +78,7 @@ object KafkaToParquet {
     val counts = Observation()
     decoded.observe(counts, count(lit(1)).as("total"),
         size(collect_set(col(distinctKeyCol))).as("distinct"))
-      .coalesce(1).write.parquet(staging.toString)
+      .coalesce(1).write.options(LocalFs.writeOptions).parquet(staging.toString)
     val observed = counts.get
     val (total, distinct) = (observed("total").asInstanceOf[Long],
       observed("distinct").asInstanceOf[Int].toLong)
@@ -103,7 +107,7 @@ object KafkaToParquet {
     val parts = Decoders.partitionParts(eventTime)
     decoded
       .withColumns(parts.toMap)
-      .write.mode("append")
+      .write.options(LocalFs.writeOptions).mode("append")
       .partitionBy("year", "month", "day", "hour")
       .parquet(s"$baseDir/$topic")
   }
@@ -111,13 +115,21 @@ object KafkaToParquet {
   /** The one streaming scaffold: a checkpointed `foreachBatch` stream
     * that decodes each micro-batch, empty ones too (neither sink writes a
     * data file for them), and hands it to `sink`. Checkpointed offsets give
-    * the reference's at-least-once retry semantics (SURVEY.md §2.6). */
+    * the reference's at-least-once retry semantics (SURVEY.md §2.6).
+    *
+    * Before `start()` it binds `FileContext` on `file:` to
+    * [[graft.io.LocalFs]] in the records' session, whose Hadoop conf the
+    * stream's offset, commit and metadata logs capture at start. Without
+    * libhadoop, Hadoop's own local FS forks a `chmod` per create and a
+    * `readlink` per link probe: 10 processes per log write. The value is
+    * always the same, so setting it again is harmless. */
   private def runDecoded(
       records: DataFrame,
       topic: String,
       schemas: SchemaProvider,
       checkpointDir: String,
-      trigger: Trigger)(sink: DataFrame => Unit): StreamingQuery =
+      trigger: Trigger)(sink: DataFrame => Unit): StreamingQuery = {
+    records.sparkSession.conf.set(LocalFs.AbstractFileSystemKey, classOf[LocalFs.Fs].getName)
     records.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -125,10 +137,13 @@ object KafkaToParquet {
         sink(decodeRecords(batch, topic, schemas))
       }
       .start()
+  }
 
   /** Streaming wrapper: any streaming record frame (Kafka source or test
     * MemoryStream with the same columns) → micro-batch decode + the exact
-    * per-batch write contract (`writeBatch`). */
+    * per-batch write contract (`writeBatch`). Checkpoint logs and batch
+    * writes go through [[graft.io.LocalFs]] on `file:`, so a batch starts
+    * no process (Hadoop's local FS forks 29 per batch without libhadoop). */
   def runStream(
       records: DataFrame,
       topic: String,

@@ -63,43 +63,58 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("restart from checkpoint does not reprocess delivered batches") {
-    assume(Files.exists(java.nio.file.Paths.get(
+    // generated records on any host; the reference fixture where it exists
+    val tiny = new graft.ingest.FixtureSchemaProvider(Map("tiny" -> TinySchema))
+    restartLandsOnce("tiny", tiny, tinyRecs("tiny", 6), tinyRecs("tiny", 4),
+      raw"tiny_\d+\.\d{6}_4_3\.parquet")
+    val haveFixture = (Files.exists(java.nio.file.Paths.get(
       "/root/reference/sample_kafka_event.json")))
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-
-    val sample = Envelope
+    lazy val sample = Envelope
       .readEventJson(spark, "/root/reference/sample_kafka_event.json")
       .collect()
       .map(r => KRec(r.getString(0), r.getInt(1), r.getLong(2),
         r.getTimestamp(3), r.getString(4),
         r.getAs[Array[Byte]](5), r.getAs[Array[Byte]](6)))
+    if (haveFixture) restartLandsOnce(RatecardSchema.topic, RatecardSchema.provider,
+      sample.take(10).toSeq, sample.drop(10).toSeq,
+      raw"lndcdcadsrtcrd_ratecard_\d+\.\d{6}_6_6\.parquet")
+  }
 
+  /** Lands `first` through `runStream`, restarts against the same checkpoint
+    * and source state, and checks that the restart reads back the committed
+    * offsets: no second file for `first`, and `next` lands as batch 1 in a
+    * file whose name matches `nextName`. */
+  private def restartLandsOnce(topic: String, schemas: graft.ingest.SchemaProvider,
+      first: Seq[KRec], next: Seq[KRec], nextName: String): Unit = {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[KRec]
     val out = Files.createTempDirectory("graft_restart").toString
     val ckpt = Files.createTempDirectory("graft_restart_ckpt").toString
-    def countFiles(): Int = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(out)).count(_.getName.endsWith(".parquet"))
-    }
+    def files() = walk(new java.io.File(out)).filter(_.getName.endsWith(".parquet"))
+      .map(f => f.getName -> f.getPath).toMap
+    def run() = KafkaToParquet.runStream(stream.toDF(), topic, schemas, out, ckpt,
+      "SRC_KEY_VAL", trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
 
-    stream.addData(sample.toSeq)
-    val q1 = KafkaToParquet.runStream(
-      stream.toDF(), RatecardSchema.topic, RatecardSchema.provider,
-      out, ckpt, "SRC_KEY_VAL",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    stream.addData(first)
+    val q1 = run()
     try q1.processAllAvailable() finally q1.stop()
-    assert(countFiles() == 1)
+    val landed = files()
+    assert(landed.size == 1, landed)
 
     // restart against the SAME checkpoint and source state: the committed
     // offsets must prevent reprocessing (no second file, no double rows)
-    val q2 = KafkaToParquet.runStream(
-      stream.toDF(), RatecardSchema.topic, RatecardSchema.provider,
-      out, ckpt, "SRC_KEY_VAL",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-    try q2.processAllAvailable() finally q2.stop()
-    assert(countFiles() == 1, "restart must not re-land the delivered batch")
+    val q2 = run()
+    try {
+      q2.processAllAvailable()
+      assert(files() == landed, "restart must not re-land the delivered batch")
+      stream.addData(next)
+      q2.processAllAvailable()
+      assert(q2.lastProgress.batchId == 1 && q2.lastProgress.numInputRows == next.size)
+    } finally q2.stop()
+    val added = files() -- landed.keys
+    assert(added.size == 1 && added.head._1.matches(nextName), added)
+    assert(spark.read.parquet(files().values.toSeq: _*).count() == first.size + next.size)
   }
 
   test("streaming lake sink appends the partitioned layout with partition pruning") {
