@@ -221,8 +221,7 @@ object Bench {
     // Skipped under SPARK_GRAFT_ONLY — a filtered run IS the isolated
     // measurement. A re-run that THROWS must surface like any other
     // failure, not masquerade as a near-zero isolated "time".
-    val reps = math.max(1,
-      sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(3))
+    val reps = Session.envInt("SPARK_GRAFT_BENCH_REPS", 3)
     val isolatedRaw: Seq[(String, Seq[(Double, Option[String])])] =
       if (only.isDefined) Seq.empty
       else timed.filter(_._3.isEmpty).map { case (q, _, _) =>

@@ -45,7 +45,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val names = args.drop(1).toSet
-    val reps = sys.env.getOrElse("SPARK_GRAFT_PROFILE_REPS", "3").toInt
+    val reps = Session.envInt("SPARK_GRAFT_PROFILE_REPS", 3)
     val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.graft.bench.singleWave", "true")

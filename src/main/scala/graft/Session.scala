@@ -8,12 +8,16 @@ import org.apache.spark.sql.SparkSession
 object Session {
 
   /** Local parallelism for the mains: `SPARK_GRAFT_CPUS`, else 4. */
-  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS") match {
-    case None => 4
-    case Some(s) => s.trim.toIntOption.filter(_ > 0).getOrElse(
-      throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
-  }
+  def cpus: Int = envInt("SPARK_GRAFT_CPUS", 4)
+
+  /** Env var `name` as a positive integer (blanks around it allowed), or
+    * `default` when unset; any other value throws, naming the variable. */
+  def envInt(name: String, default: Int, env: Map[String, String] = sys.env): Int =
+    env.get(name) match {
+      case None => default
+      case Some(s) => s.trim.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(s"$name must be a positive integer, got '$s'"))
+    }
 
   /** The shared settings on `local[cpus]`; callers add their own extras. */
   def builder(cpus: Int = Session.cpus): SparkSession.Builder = SparkSession.builder()

@@ -9,6 +9,7 @@ import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
   FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.SparkSession
 
 /** Hadoop's local (`file:`) filesystem without a process per call. With no
   * libhadoop on the host (pip and tarball Spark ship none),
@@ -48,6 +49,14 @@ object LocalFs {
 
   /** Binds `FileContext` on `file:` to [[Fs]]; Hadoop never caches one. */
   val AbstractFileSystemKey = "fs.AbstractFileSystem.file.impl"
+
+  /** Binds `FileContext` on `file:` to [[Fs]] in `spark`'s session conf. A
+    * stream captures that conf at `start()` for its offset, commit and
+    * metadata logs and its state-store files, so every streaming query
+    * started after this writes them without a process. The value is
+    * always the same, so binding again is harmless. */
+  def bind(spark: SparkSession): Unit =
+    spark.conf.set(AbstractFileSystemKey, classOf[Fs].getName)
 
   /** Write options that bind `file:` to [[FileSystem]]: the cached `file:`
     * instance predates them, so the cache is bypassed for the write. */

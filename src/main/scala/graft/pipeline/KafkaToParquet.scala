@@ -117,19 +117,18 @@ object KafkaToParquet {
     * data file for them), and hands it to `sink`. Checkpointed offsets give
     * the reference's at-least-once retry semantics (SURVEY.md §2.6).
     *
-    * Before `start()` it binds `FileContext` on `file:` to
-    * [[graft.io.LocalFs]] in the records' session, whose Hadoop conf the
-    * stream's offset, commit and metadata logs capture at start. Without
+    * Before `start()` it binds `file:` to [[graft.io.LocalFs]] in the
+    * records' session (`LocalFs.bind`), whose Hadoop conf the stream's
+    * offset, commit and metadata logs capture at start. Without
     * libhadoop, Hadoop's own local FS forks a `chmod` per create and a
-    * `readlink` per link probe: 10 processes per log write. The value is
-    * always the same, so setting it again is harmless. */
+    * `readlink` per link probe: 10 processes per log write. */
   private def runDecoded(
       records: DataFrame,
       topic: String,
       schemas: SchemaProvider,
       checkpointDir: String,
       trigger: Trigger)(sink: DataFrame => Unit): StreamingQuery = {
-    records.sparkSession.conf.set(LocalFs.AbstractFileSystemKey, classOf[LocalFs.Fs].getName)
+    LocalFs.bind(records.sparkSession)
     records.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)

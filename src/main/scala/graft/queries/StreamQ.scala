@@ -1,13 +1,17 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.FileTime
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import graft.io.LocalFs
 import graft.streaming.StreamingOps
 
 /** Streaming twins of the batch event-analytics entries, oracle-checked:
   * each runs a REAL streaming query (file source → stateful op →
-  * Trigger.AvailableNow → memory sink) and hash-matches a batch DuckDB
+  * Trigger.AvailableNow → sink) and hash-matches a batch DuckDB
   * oracle over the same parquet. This is the replay-equivalence property a
   * 100 TB streaming deployment rests on — the streaming operator, run to
   * completion over a finite input, must agree with the batch semantics:
@@ -20,6 +24,11 @@ import graft.streaming.StreamingOps
   *     event-time timer when the final watermark passes its end + gap
   *     (ms-floor comparison, the watermark's granularity — the oracle
   *     replays that arithmetic exactly).
+  *
+  * Every entry starts its stream through one runner, [[runBounded]]: it
+  * binds `file:` to [[graft.io.LocalFs]], so checkpoint and state-store
+  * files start no process, and it sets the state width (and, when asked,
+  * the RocksDB state store) for the run and restores both afterwards.
   */
 object StreamQ {
 
@@ -32,7 +41,6 @@ object StreamQ {
     * directories already — this shim is test-layout plumbing, not part of
     * the operator. */
   private def asDir(path: String): String = {
-    import java.nio.file.{Files, Paths}
     val src = Paths.get(path)
     // md5 of the full path, not hashCode: a 32-bit collision between two
     // same-named sources would silently serve the wrong table
@@ -53,8 +61,11 @@ object StreamQ {
       s.readStream.schema(s.read.parquet(path).schema).parquet(asDir(path)))
   }
 
-  /** Run a finite streaming frame to completion into a memory sink and
-    * return the sink's content.
+  /** The one runner: `start` gets `df`'s writer with `Trigger.AvailableNow`
+    * applied, adds its sink, checkpoint and output mode, and starts it;
+    * the runner waits for the bounded run to finish. Before the start it
+    * binds `file:` to [[graft.io.LocalFs]] on `df`'s session, which the
+    * stream captures for its offset, commit and state-store files.
     *
     * Stateful streaming partition count is sized to STATE volume, not
     * batch data volume: every micro-batch pays a state-store
@@ -62,25 +73,59 @@ object StreamQ {
     * batch-tuned shuffle.partitions) multiplies fixed cost without
     * adding parallelism the state fits in. The partition count is
     * pinned at query start by the checkpoint — a real deployment picks
-    * it once per query from expected live-state size.
+    * it once per query from expected live-state size. `rocksDb` pins the
+    * RocksDB state store provider for the run (`transformWithState`
+    * requires it; it is the 100 TB deployment setting anyway — state
+    * off-heap/on-disk, not bounded by executor heap).
     *
-    * The override mutates the session-global shuffle width for the
-    * stream's (bounded, AvailableNow) run — single-threaded catalog
-    * execution is assumed; concurrent queries should use a separate
-    * `spark.newSession()`. */
-  private def runToSink(df: DataFrame, name: String,
-      statePartitions: Int = 8): DataFrame = {
+    * Both settings are session-global for the run and restored after
+    * it — single-threaded catalog execution is assumed; concurrent
+    * queries should use a separate `spark.newSession()`. */
+  private def runBounded(df: DataFrame, statePartitions: Int = 8,
+      rocksDb: Boolean = false)(
+      start: DataStreamWriter[Row] => StreamingQuery): Unit = {
     val s = df.sparkSession
-    s.catalog.dropTempView(name)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    try {
-      val q = df.writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    s.table(name)
+    LocalFs.bind(s)
+    val confs = Seq("spark.sql.shuffle.partitions" -> statePartitions.toString) ++
+      Option.when(rocksDb)("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // getAll lists only keys set on the session: one left at its default
+    // is unset again afterwards, not pinned to that default
+    val prev = confs.map { case (k, _) => k -> s.conf.getAll.get(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try start(df.writeStream.trigger(Trigger.AvailableNow())).awaitTermination()
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  /** Run a finite streaming frame to completion into a memory sink (on
+    * Spark's temporary checkpoint) and return the sink's content. */
+  private def runToSink(df: DataFrame, name: String, mode: String = "append",
+      rocksDb: Boolean = false): DataFrame = {
+    df.sparkSession.catalog.dropTempView(name)
+    runBounded(df, rocksDb = rocksDb)(
+      _.outputMode(mode).format("memory").queryName(name).start())
+    df.sparkSession.table(name)
+  }
+
+  /** Ordered arrival: slice k lands as ONE file under `root/in/k` and the
+    * returned stream reads one file per micro-batch, so slice k IS
+    * micro-batch k. The file source batches by modification time, not
+    * path, so each file's mtime is pinned to 1000000 + k·60000 ms: the
+    * order holds even when the writes land inside one clock tick. */
+  private def orderedArrival(root: String, slices: Seq[DataFrame]): DataFrame = {
+    val s = slices.head.sparkSession
+    for ((slice, k) <- slices.zipWithIndex) {
+      slice.coalesce(1).write.mode("overwrite").parquet(s"$root/in/$k")
+      val files = Files.list(Paths.get(s"$root/in/$k"))
+      try files.forEach(p =>
+        Files.setLastModifiedTime(p, FileTime.fromMillis(1000000L + k * 60000L)))
+      finally files.close()
+    }
+    s.readStream.schema(s.read.parquet(s"$root/in/0").schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$root/in/*")
   }
 
   val q71_stream_interval_join = Q(
@@ -234,35 +279,6 @@ object StreamQ {
         .orderBy("event_id")
     })
 
-  /** Update-mode variant of [[runToSink]] that also pins the RocksDB
-    * state store provider for the run (`transformWithState` requires it;
-    * it is the 100 TB deployment setting anyway — state off-heap/on-disk,
-    * not bounded by executor heap). */
-  private def runToSinkUpdate(df: DataFrame, name: String,
-      statePartitions: Int = 8): DataFrame = {
-    val s = df.sparkSession
-    s.catalog.dropTempView(name)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = s.conf.getOption(provKey)
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = df.writeStream.outputMode("update")
-        .format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevProv match {
-        case Some(v) => s.conf.set(provKey, v)
-        case None => s.conf.unset(provKey)
-      }
-    }
-    s.table(name)
-  }
-
   /** Running per-user totals on the transformWithState API
     * (StreamingOps.RunningTotalsProcessor) run to completion ≡ the batch
     * per-user aggregate: every micro-batch emits a key's UPDATED totals,
@@ -285,8 +301,8 @@ object StreamQ {
         .select(col("user_id"),
           (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
         .as[StreamingOps.TwsEvent]
-      val sink = runToSinkUpdate(
-        StreamingOps.runningTotals(evs).toDF(), "q142_sink")
+      val sink = runToSink(StreamingOps.runningTotals(evs).toDF(), "q142_sink",
+        "update", rocksDb = true)
       // final state per key = the update with the largest n_events
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy(col("n_events").desc)
@@ -400,7 +416,7 @@ object StreamQ {
       val firsts = eventStream(s, d)
         .select(col("user_id"), dayOf.as("day"))
         .groupBy("user_id").agg(min("day").as("first_day"))
-      val sink = runToSinkUpdate(firsts, "q291_sink")
+      val sink = runToSink(firsts, "q291_sink", "update", rocksDb = true)
       // final state per user = the min across its updates (monotone)
       val fin = sink.groupBy("user_id").agg(min("first_day").as("first_day"))
         .groupBy(col("first_day").as("day"))
@@ -441,24 +457,18 @@ object StreamQ {
       val good = s"$outRoot/good"
       val dlq = s"$outRoot/dlq"
       val base = eventStream(s, d).select(col("event_id"), col("event_type"))
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      try {
-        val q = base.writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            // one materialization, two routed writes per micro-batch
-            val b = batch.persist()
-            b.filter(col("event_type") =!= "error")
-              .write.mode("append").parquet(good)
-            b.filter(col("event_type") === "error")
-              .write.mode("append").parquet(dlq)
-            b.unpersist()
-            ()
-          }
-          .option("checkpointLocation", s"$outRoot/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      runBounded(base)(_
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          // one materialization, two routed writes per micro-batch
+          val b = batch.persist()
+          b.filter(col("event_type") =!= "error")
+            .write.mode("append").parquet(good)
+          b.filter(col("event_type") === "error")
+            .write.mode("append").parquet(dlq)
+          b.unpersist()
+          ()
+        }
+        .option("checkpointLocation", s"$outRoot/ckpt").start())
       // read back with the writer's schema: a run where one route gets
       // zero rows leaves that directory with no part files, and schema
       // inference would throw instead of counting 0 (ADVICE r9)
@@ -516,23 +526,16 @@ object StreamQ {
       // maxFilesPerTrigger=1 (AvailableNow honors source limits)
       ev.repartition(4).write.parquet(inDir)
       val schema = s.read.parquet(inDir).schema
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      try {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-          .writeStream
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            // the ONLY thing persisted per batch is the grid histogram
-            b.groupBy("val").agg(count(lit(1)).as("c"))
-              .withColumn("batch_id", lit(id))
-              .write.mode("append").parquet(sumDir)
-            ()
-          }
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      runBounded(s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(inDir))(_
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          // the ONLY thing persisted per batch is the grid histogram
+          b.groupBy("val").agg(count(lit(1)).as("c"))
+            .withColumn("batch_id", lit(id))
+            .write.mode("append").parquet(sumDir)
+          ()
+        }
+        .option("checkpointLocation", s"$root/ckpt").start())
       val hist = graft.operators.PlanCache.persist(
         s.read.parquet(sumDir))
       def medOf(grid: DataFrame): DataFrame = {
@@ -616,67 +619,47 @@ object StreamQ {
         .select(col("event_id"), col("us"),
           when(col("event_id") % 11 === 0, least(quart + 2, lit(3L)))
             .otherwise(least(quart, lit(3L))).as("b")))
-      // 4 slice dirs named in arrival order: the file source sorts by
-      // path, so slice k IS micro-batch k under maxFilesPerTrigger=1
-      (0 to 3).foreach { b =>
-        arr.filter(col("b") === b).select("event_id", "us")
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/in/slice$b")
-        // the file source batches by modification time, not path: pin
-        // strictly increasing mtimes so slice k IS micro-batch k even
-        // when the four writes land inside one clock tick
-        val dir = java.nio.file.Paths.get(s"$root/in/slice$b")
-        java.nio.file.Files.list(dir).forEach { p =>
-          java.nio.file.Files.setLastModifiedTime(p,
-            java.nio.file.attribute.FileTime.fromMillis(1000000L + b * 60000L))
-        }
-      }
-      val inSchema = s.read.parquet(s"$root/in/slice0").schema
+      // 4 slices in arrival order: slice k IS micro-batch k
+      val arrivals = orderedArrival(root,
+        (0 to 3).map(b => arr.filter(col("b") === b).select("event_id", "us")))
       val audit = s"$root/audit"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 4)
-      try {
-        val q = s.readStream.schema(inSchema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$root/in/*")
-          .writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val sp = batch.sparkSession
-            // watermark = max event time of STRICTLY EARLIER batches −
-            // delay (exactly Structured Streaming's recursion, but with
-            // the drop made visible): one tiny row per batch crosses
-            // the boundary, never data
-            val priorMax: Option[Long] =
-              try Option(sp.read.parquet(audit)
-                  .agg(max("bmx")).head().get(0)).map(_.toString.toLong)
-              catch { case _: Throwable => None }
-            val wm = priorMax.map(_ - delayUs)
-            // ONE action computes all three per-batch stats (r13: was a
-            // persist + three separate jobs — the fixed per-job cost
-            // dominated this entry's wall)
-            val statsRow = batch.agg(
-              count(lit(1)).as("total"),
-              sum(when(col("us") < wm.map(lit(_)).getOrElse(lit(Long.MinValue)),
-                1L).otherwise(0L)).as("late"),
-              max("us").as("bmx")).head()
-            val total = statsRow.getLong(0)
-            val late =
-              if (wm.isEmpty || statsRow.isNullAt(1)) 0L
-              else statsRow.getLong(1)
-            val bmx = Option(statsRow.get(2))
-              .map(_.toString.toLong).getOrElse(Long.MinValue)
-            // ONE audit row carries the batch stats AND the watermark
-            // carrier (bmx) — one write job per batch, not two
-            sp.range(1)
-              .select(lit(id).as("batch"), lit(total).as("n_arrived"),
-                lit(late).as("n_late"),
-                wm.map(lit(_)).getOrElse(lit(null)).cast("long").as("wm_us"),
-                lit(bmx).as("bmx"))
-              .write.mode("append").parquet(audit)
-            ()
-          }
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      runBounded(arrivals, statePartitions = 4)(_
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          val sp = batch.sparkSession
+          // watermark = max event time of STRICTLY EARLIER batches −
+          // delay (exactly Structured Streaming's recursion, but with
+          // the drop made visible): one tiny row per batch crosses
+          // the boundary, never data
+          val priorMax: Option[Long] =
+            try Option(sp.read.parquet(audit)
+                .agg(max("bmx")).head().get(0)).map(_.toString.toLong)
+            catch { case _: Throwable => None }
+          val wm = priorMax.map(_ - delayUs)
+          // ONE action computes all three per-batch stats (r13: was a
+          // persist + three separate jobs — the fixed per-job cost
+          // dominated this entry's wall)
+          val statsRow = batch.agg(
+            count(lit(1)).as("total"),
+            sum(when(col("us") < wm.map(lit(_)).getOrElse(lit(Long.MinValue)),
+              1L).otherwise(0L)).as("late"),
+            max("us").as("bmx")).head()
+          val total = statsRow.getLong(0)
+          val late =
+            if (wm.isEmpty || statsRow.isNullAt(1)) 0L
+            else statsRow.getLong(1)
+          val bmx = Option(statsRow.get(2))
+            .map(_.toString.toLong).getOrElse(Long.MinValue)
+          // ONE audit row carries the batch stats AND the watermark
+          // carrier (bmx) — one write job per batch, not two
+          sp.range(1)
+            .select(lit(id).as("batch"), lit(total).as("n_arrived"),
+              lit(late).as("n_late"),
+              wm.map(lit(_)).getOrElse(lit(null)).cast("long").as("wm_us"),
+              lit(bmx).as("bmx"))
+            .write.mode("append").parquet(audit)
+          ()
+        }
+        .option("checkpointLocation", s"$root/ckpt").start())
       s.read.parquet(audit)
         .select(col("batch"), col("n_arrived"), col("n_late"), col("wm_us"))
         .orderBy("batch")
@@ -716,26 +699,19 @@ object StreamQ {
       val ev = graft.Tables.events(s, d).select(col("event_id"))
       ev.repartition(4).write.parquet(inDir)
       val schema = s.read.parquet(inDir).schema
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      try {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-          .writeStream
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            // k rows of per-batch state: the local bottom-32 priorities
-            b.withColumn("__h", md5(col("event_id").cast("string")))
-              .select(col("event_id"),
-                graft.functions.TextFunctions.hexSpanVal(col("__h"), 0, 13)
-                  .cast("long").as("priority"))
-              .orderBy(col("priority"), col("event_id")).limit(32)
-              .write.mode("append").parquet(candDir)
-            ()
-          }
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      runBounded(s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(inDir))(_
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          // k rows of per-batch state: the local bottom-32 priorities
+          b.withColumn("__h", md5(col("event_id").cast("string")))
+            .select(col("event_id"),
+              graft.functions.TextFunctions.hexSpanVal(col("__h"), 0, 13)
+                .cast("long").as("priority"))
+            .orderBy(col("priority"), col("event_id")).limit(32)
+            .write.mode("append").parquet(candDir)
+          ()
+        }
+        .option("checkpointLocation", s"$root/ckpt").start())
       s.read.parquet(candDir)
         .orderBy(col("priority"), col("event_id")).limit(32)
         .select(col("event_id"), col("priority"))
@@ -772,29 +748,22 @@ object StreamQ {
       val root = java.nio.file.Files
         .createTempDirectory("graft_genstream_").toString
       val gridDir = s"$root/grids"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      try {
-        // columnar=true (r14, VERDICT r13 #5): each micro-batch's id
-        // range is vectorized into ColumnarBatches — the streaming scan
-        // now rides the same columnar path q468 proved for the batch
-        // scan; offsets, pacing, results unchanged (GenDocsSpec pins
-        // row/columnar streaming parity)
-        val q = s.readStream.format("graft.sources.GenDocs")
+      // columnar=true (r14, VERDICT r13 #5): each micro-batch's id
+      // range is vectorized into ColumnarBatches — the streaming scan
+      // now rides the same columnar path q468 proved for the batch
+      // scan; offsets, pacing, results unchanged (GenDocsSpec pins
+      // row/columnar streaming parity)
+      runBounded(s.readStream.format("graft.sources.GenDocs")
           .option("rows", "35000").option("batchRows", "8000")
-          .option("slices", "4").option("columnar", "true").load()
-          .writeStream
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            b.groupBy("bucket")
-              .agg(count(lit(1)).as("n"), sum(Q.dec(col("v"))).as("sv"))
-              .withColumn("batch_id", lit(id))
-              .write.mode("append").parquet(gridDir)
-            ()
-          }
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+          .option("slices", "4").option("columnar", "true").load())(_
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          b.groupBy("bucket")
+            .agg(count(lit(1)).as("n"), sum(Q.dec(col("v"))).as("sv"))
+            .withColumn("batch_id", lit(id))
+            .write.mode("append").parquet(gridDir)
+          ()
+        }
+        .option("checkpointLocation", s"$root/ckpt").start())
       val grids = graft.operators.PlanCache.persist(s.read.parquet(gridDir))
       val meta = grids.agg(countDistinct("batch_id").as("n_batches"))
       grids.groupBy("bucket")
@@ -835,21 +804,14 @@ object StreamQ {
         .createTempDirectory("graft_genresume_").toString
       val outDir = s"$root/sink"
       val ckpt = s"$root/ckpt"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      def run(rows: Long): Unit = {
-        val q = s.readStream.format("graft.sources.GenDocs")
-          .option("rows", rows.toString).option("batchRows", "10000")
-          .option("slices", "4").load()
-          .select(col("id"), col("bucket"), col("v"))
-          .writeStream.format("parquet")
-          .option("path", outDir)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      try { run(20000L); run(40000L) }
-      finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      def run(rows: Long): Unit =
+        runBounded(s.readStream.format("graft.sources.GenDocs")
+            .option("rows", rows.toString).option("batchRows", "10000")
+            .option("slices", "4").load()
+            .select(col("id"), col("bucket"), col("v")))(_
+          .format("parquet").option("path", outDir)
+          .option("checkpointLocation", ckpt).start())
+      run(20000L); run(40000L)
       // the read respects the file sink's _spark_metadata commit log —
       // only files from COMMITTED batches are visible
       s.read.parquet(outDir)
@@ -887,23 +849,16 @@ object StreamQ {
       val root = java.nio.file.Files
         .createTempDirectory("graft_genwm_").toString
       s.catalog.dropTempView("q456_sink")
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      try {
-        val q = s.readStream.format("graft.sources.GenDocs")
+      runBounded(s.readStream.format("graft.sources.GenDocs")
           .option("rows", "10000").option("batchRows", "2500")
           .option("slices", "4").load()
           .select(col("id"), col("v"),
             expr("timestamp_micros(id * 1000000)").as("ets"))
           .withWatermark("ets", "10 seconds")
           .groupBy(window(col("ets"), "500 seconds"))
-          .agg(count(lit(1)).as("n"), sum(Q.dec(col("v"))).as("sv"))
-          .writeStream.outputMode("append")
-          .format("memory").queryName("q456_sink")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+          .agg(count(lit(1)).as("n"), sum(Q.dec(col("v"))).as("sv")))(_
+        .outputMode("append").format("memory").queryName("q456_sink")
+        .option("checkpointLocation", s"$root/ckpt").start())
       s.table("q456_sink")
         .select(unix_timestamp(col("window.start")).as("ws"),
           col("n"),
@@ -940,19 +895,13 @@ object StreamQ {
       graft.sources.CountingSink.clearRun(runId)
       val root = java.nio.file.Files
         .createTempDirectory("graft_v2sink_").toString
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      try {
-        val q = s.readStream.format("graft.sources.GenDocs")
+      runBounded(s.readStream.format("graft.sources.GenDocs")
           .option("rows", "24000").option("batchRows", "6000")
           .option("slices", "4").load()
-          .select(col("id"))
-          .writeStream.format("graft.sources.CountingSinkProvider")
-          .option("runid", runId)
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+          .select(col("id")))(_
+        .format("graft.sources.CountingSinkProvider")
+        .option("runid", runId)
+        .option("checkpointLocation", s"$root/ckpt").start())
       // the ledger is driver-side metadata (one pair per epoch); a
       // trailing no-data micro-batch (n=0) is not an id range and is
       // excluded — the oracle checks the four data epochs exactly
@@ -993,20 +942,13 @@ object StreamQ {
       s.sql(s"CREATE TABLE $tbl (bucket BIGINT, n BIGINT, sum_id BIGINT)")
       val root = java.nio.file.Files
         .createTempDirectory("graft_upsert_").toString
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      try {
-        val q = s.readStream.format("graft.sources.GenDocs")
+      runBounded(s.readStream.format("graft.sources.GenDocs")
           .option("rows", "30000").option("batchRows", "7500")
           .option("slices", "4").load()
           .groupBy(col("bucket"))
-          .agg(count(lit(1)).as("n"), sum("id").cast("long").as("sum_id"))
-          .writeStream.outputMode("update")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .toTable(tbl)
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+          .agg(count(lit(1)).as("n"), sum("id").cast("long").as("sum_id")))(_
+        .outputMode("update")
+        .option("checkpointLocation", s"$root/ckpt").toTable(tbl))
       s.table(tbl).orderBy("bucket")
     })
 
@@ -1036,20 +978,13 @@ object StreamQ {
         "TBLPROPERTIES('graft.storage'='files')")
       val root = java.nio.file.Files
         .createTempDirectory("graft_fupsert_").toString
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      try {
-        val q = s.readStream.format("graft.sources.GenDocs")
+      runBounded(s.readStream.format("graft.sources.GenDocs")
           .option("rows", "24000").option("batchRows", "6000")
           .option("slices", "4").load()
           .groupBy(col("bucket"))
-          .agg(count(lit(1)).as("n"), sum("id").cast("long").as("sum_id"))
-          .writeStream.outputMode("update")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .toTable(tbl)
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+          .agg(count(lit(1)).as("n"), sum("id").cast("long").as("sum_id")))(_
+        .outputMode("update")
+        .option("checkpointLocation", s"$root/ckpt").toTable(tbl))
       s.table(tbl).orderBy("bucket")
     })
 
@@ -1082,20 +1017,13 @@ object StreamQ {
         "'graft.overlaybudget'='120')")
       val root = java.nio.file.Files
         .createTempDirectory("graft_bupsert_").toString
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      try {
-        val q = s.readStream.format("graft.sources.GenDocs")
+      runBounded(s.readStream.format("graft.sources.GenDocs")
           .option("rows", "24000").option("batchRows", "6000")
           .option("slices", "4").load()
           .groupBy(col("bucket"))
-          .agg(count(lit(1)).as("n"), sum("id").cast("long").as("sum_id"))
-          .writeStream.outputMode("update")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .toTable(tbl)
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+          .agg(count(lit(1)).as("n"), sum("id").cast("long").as("sum_id")))(_
+        .outputMode("update")
+        .option("checkpointLocation", s"$root/ckpt").toTable(tbl))
       val st = graft.sources.FileStore.stateOf(key).get
       val bounded = graft.sources.FileStore.overlayRows(st) <=
         st.overlayBudget
@@ -1143,25 +1071,17 @@ object StreamQ {
             .as("cents"))
       val root = java.nio.file.Files
         .createTempDirectory("graft_lakesrc_").toString
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      def drain(): Unit = {
-        val q = s.readStream.table(src)
-          .groupBy(col("o_orderstatus"))
-          .agg(count(lit(1)).as("n"),
-            sum("cents").cast("long").as("sum_cents"))
-          .writeStream.outputMode("update")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .toTable(sink)
-        q.awaitTermination()
-      }
-      try {
-        rows.filter(col("o_orderkey") % 3 =!= 0).writeTo(src).append()
-        drain() // run 1: the initial snapshot
-        rows.filter(col("o_orderkey") % 3 === 0).writeTo(src).append()
-        drain() // run 2: ONLY wave 2's files; agg state resumes
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      def drain(): Unit =
+        runBounded(s.readStream.table(src)
+            .groupBy(col("o_orderstatus"))
+            .agg(count(lit(1)).as("n"),
+              sum("cents").cast("long").as("sum_cents")))(_
+          .outputMode("update")
+          .option("checkpointLocation", s"$root/ckpt").toTable(sink))
+      rows.filter(col("o_orderkey") % 3 =!= 0).writeTo(src).append()
+      drain() // run 1: the initial snapshot
+      rows.filter(col("o_orderkey") % 3 === 0).writeTo(src).append()
+      drain() // run 2: ONLY wave 2's files; agg state resumes
       s.table(sink).orderBy("o_orderstatus")
     })
 
@@ -1256,50 +1176,30 @@ object StreamQ {
         (col("base_unit_length") + 1).as("base_unit_length"),
         when(col("rate_card_id") % 5 === 0, "DELETE")
           .otherwise("UPDATE").as("op"))
-      // the windows arrive as TWO ordered micro-batches: slice dirs with
-      // pinned mtimes under maxFilesPerTrigger=1 (the q376 device)
+      // the windows arrive as TWO ordered micro-batches (the q376 device)
       val root = java.nio.file.Files
         .createTempDirectory("graft_cdcstream_").toString
-      for ((w, i) <- Seq(w1, w2).zipWithIndex) {
-        w.coalesce(1).write.mode("overwrite").parquet(s"$root/in/w$i")
-        val dirStream = java.nio.file.Files
-          .list(java.nio.file.Paths.get(s"$root/in/w$i"))
-        try dirStream.forEach { p =>
-          java.nio.file.Files.setLastModifiedTime(p,
-            java.nio.file.attribute.FileTime
-              .fromMillis(1000000L + i * 60000L))
-        } finally dirStream.close()
-      }
-      val inSchema = s.read.parquet(s"$root/in/w0").schema
       // bumped on the stream-execution thread, read after termination
       val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 4)
-      try {
-        val q = s.readStream.schema(inSchema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$root/in/*")
-          .writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batches.incrementAndGet()
-            batch.createOrReplaceTempView("q485_window")
-            batch.sparkSession.sql(
-              s"""MERGE INTO $tbl t USING q485_window s
-                 |ON t.rate_card_id = s.rate_card_id
-                 |WHEN MATCHED AND s.op = 'DELETE' THEN DELETE
-                 |WHEN MATCHED THEN UPDATE SET
-                 |  rate_card_nm = s.rate_card_nm, crncy_id = s.crncy_id,
-                 |  base_unit_length = s.base_unit_length
-                 |WHEN NOT MATCHED AND s.op <> 'DELETE' THEN
-                 |  INSERT (rate_card_id, rate_card_nm, crncy_id,
-                 |    base_unit_length)
-                 |  VALUES (s.rate_card_id, s.rate_card_nm, s.crncy_id,
-                 |    s.base_unit_length)""".stripMargin)
-            ()
-          }
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      runBounded(orderedArrival(root, Seq(w1, w2)), statePartitions = 4)(_
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          batches.incrementAndGet()
+          batch.createOrReplaceTempView("q485_window")
+          batch.sparkSession.sql(
+            s"""MERGE INTO $tbl t USING q485_window s
+               |ON t.rate_card_id = s.rate_card_id
+               |WHEN MATCHED AND s.op = 'DELETE' THEN DELETE
+               |WHEN MATCHED THEN UPDATE SET
+               |  rate_card_nm = s.rate_card_nm, crncy_id = s.crncy_id,
+               |  base_unit_length = s.base_unit_length
+               |WHEN NOT MATCHED AND s.op <> 'DELETE' THEN
+               |  INSERT (rate_card_id, rate_card_nm, crncy_id,
+               |    base_unit_length)
+               |  VALUES (s.rate_card_id, s.rate_card_nm, s.crncy_id,
+               |    s.base_unit_length)""".stripMargin)
+          ()
+        }
+        .option("checkpointLocation", s"$root/ckpt").start())
       // both windows applied AND the 20-row budget folded the overlay
       // mid-stream (each window writes ~2× its row count in delta rows)
       val st = graft.sources.FileStore.stateOf(key).get
@@ -1351,21 +1251,14 @@ object StreamQ {
       rows.filter(col("o_orderkey") % 3 === 0).writeTo(src).append() // v3
       val root = java.nio.file.Files
         .createTempDirectory("graft_startv_").toString
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      try {
-        val q = s.readStream
+      runBounded(s.readStream
           .option("startingVersion", startV.toString)
           .table(src)
           .groupBy(col("o_orderstatus"))
           .agg(count(lit(1)).as("n"),
-            sum("cents").cast("long").as("sum_cents"))
-          .writeStream.outputMode("update")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .toTable(sink)
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+            sum("cents").cast("long").as("sum_cents")))(_
+        .outputMode("update")
+        .option("checkpointLocation", s"$root/ckpt").toTable(sink))
       s.table(sink).orderBy("o_orderstatus")
     })
 

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, PlanCache}
 
 /** The operator-persist contract (PlanCache), the bench's loud-failure
-  * contract (Bench.timeEntry) and the one-session-builder audit.
+  * contract (Bench.timeEntry), the one-session-builder audit, the env
+  * parser and the one-stream-runner audit.
   */
 class PlanCacheSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -113,5 +114,42 @@ class PlanCacheSpec extends AnyFunSuite {
       .map(p => Paths.get("src").relativize(p).toString).toList.sorted
     assert(callers == List("main/scala/graft/Session.scala"),
       "session builders outside graft.Session:\n" + callers.mkString("\n"))
+  }
+
+  test("Session.envInt takes a positive integer and names the variable otherwise") {
+    def parse(v: String) = Session.envInt("SPARK_GRAFT_X", 7, Map("SPARK_GRAFT_X" -> v))
+    assert(Session.envInt("SPARK_GRAFT_X", 7, Map.empty) == 7)
+    assert(parse(" 3 ") == 3)
+    for (bad <- Seq("x", "0")) {
+      val e = intercept[IllegalArgumentException](parse(bad))
+      assert(e.getMessage == s"SPARK_GRAFT_X must be a positive integer, got '$bad'")
+    }
+  }
+
+  test("audit: StreamQ starts, waits for and widens its streams only in runBounded") {
+    // One runner for the catalog's streams: the AvailableNow trigger, the
+    // wait and the session-global state width each appear on one code
+    // line, inside runBounded. A hit elsewhere is named by the member
+    // (entry or helper) it sits in.
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.{Files, Paths}
+    val lines = Files.readAllLines(
+      Paths.get("src/main/scala/graft/queries/StreamQ.scala")).asScala.toIndexedSeq
+    val member = "^  (?:private )?(?:val|def) (\\w+)".r.unanchored
+    val owners = lines.scanLeft("")((o, l) => l match {
+      case member(name) => name
+      case _ => o
+    }).tail
+    def isComment(line: String): Boolean = {
+      val t = line.trim
+      t.startsWith("//") || t.startsWith("/*") || t.startsWith("*")
+    }
+    val patterns = Seq("Trigger.AvailableNow()", "awaitTermination",
+      "\"spark.sql.shuffle.partitions\"", "SHUFFLE_PARTITIONS")
+    val hits = patterns.map(p => p -> lines.indices.filter(i =>
+      !isComment(lines(i)) && lines(i).contains(p)).map(owners))
+    val expected = Seq(1, 1, 1, 0).map(Seq.fill(_)("runBounded"))
+    assert(hits.map(_._2) == expected, hits.map { case (p, os) =>
+      s"$p: ${os.size} (${os.distinct.mkString(", ")})" }.mkString("\n"))
   }
 }

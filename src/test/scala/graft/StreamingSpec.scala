@@ -370,4 +370,47 @@ class StreamingSpec extends AnyFunSuite {
     assert(ledger == Map(0L -> ((3L, 6L)), 2L -> ((3L, 60L))),
       s"epoch ledger: $ledger")
   }
+
+  test("catalog streams restore the session's width and provider and bind LocalFs") {
+    val sf = "/root/testdata/sf0.001"
+    assume(Files.isDirectory(java.nio.file.Paths.get(sf)))
+    val widthKey = "spark.sql.shuffle.partitions"
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val (width, provider) = (spark.conf.get(widthKey), spark.conf.getAll.get(providerKey))
+    spark.conf.set(widthKey, "3")
+    spark.conf.unset(providerKey)
+    try {
+      // the RocksDB pin, a width of 4, and two runs on one checkpoint
+      import graft.queries.StreamQ._
+      for (q <- Seq(q142_stream_tws_totals, q376_stream_late_data, q455_stream_resume_growth))
+        assert(q.run(spark, sf).collect().nonEmpty, q.name)
+      assert(spark.conf.get(widthKey) == "3")
+      assert(spark.conf.getAll.get(providerKey).isEmpty,
+        s"$providerKey left set to ${spark.conf.getAll.get(providerKey)}")
+      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
+        new java.net.URI("file:///"), spark.sessionState.newHadoopConf())
+      assert(fc.getDefaultFileSystem.isInstanceOf[graft.io.LocalFs.Fs])
+    } finally {
+      spark.conf.set(widthKey, width)
+      provider.foreach(spark.conf.set(providerKey, _))
+    }
+  }
+
+  test("q376 holds no file descriptor open across runs") {
+    val sf = "/root/testdata/sf0.001"
+    val fds = java.nio.file.Paths.get("/proc/self/fd")
+    assume(Files.isDirectory(fds) && Files.isDirectory(java.nio.file.Paths.get(sf)))
+    def open(): Int = {
+      System.gc()
+      val ds = Files.list(fds)
+      try ds.count().toInt finally ds.close()
+    }
+    def run() = graft.queries.StreamQ.q376_stream_late_data.run(spark, sf).collect()
+    run() // the first run opens what the session keeps open
+    val before = open()
+    (1 to 5).foreach(_ => run())
+    val after = open()
+    info(s"open fds: $before before, $after after")
+    assert(after - before <= 8, s"open fds went from $before to $after over 5 runs")
+  }
 }
