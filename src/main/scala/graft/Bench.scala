@@ -30,17 +30,28 @@ object Bench {
     * the number is the query, not the teardown. */
   def timeEntry(spark: SparkSession, sfDir: String,
       q: queries.Q): (Double, Option[String]) = {
+    val (_, sec, err) = timeBuildAndEntry(spark, sfDir, q)
+    (sec, err)
+  }
+
+  /** [[timeEntry]] that also returns, first, the seconds `q.run` took to
+    * build the frame before its `count()`: construction-time analysis and
+    * any eager work the entry does. A frame that never got built reports
+    * the whole time there. */
+  def timeBuildAndEntry(spark: SparkSession, sfDir: String,
+      q: queries.Q): (Double, Double, Option[String]) = {
     val t0 = System.nanoTime()
+    var built = Option.empty[Long]
     val err =
-      try { q.run(spark, sfDir).count(); None }
+      try { val df = q.run(spark, sfDir); built = Some(System.nanoTime()); df.count(); None }
       catch { case e: Throwable =>
         Some(Option(e.getMessage).getOrElse(e.getClass.getName)
           .replaceAll("\\s+", " ").take(200))
       }
-    val sec = (System.nanoTime() - t0) / 1e9
+    val end = System.nanoTime()
     operators.PlanCache.releaseAll()
     spark.catalog.clearCache()
-    (sec, err)
+    ((built.getOrElse(end) - t0) / 1e9, (end - t0) / 1e9, err)
   }
 
   /** Ingest throughput replay (VERDICT r8 #5, r11 #5): the reference's

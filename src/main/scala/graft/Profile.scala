@@ -6,7 +6,9 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 /** Runtime profiling harness for the optimization rounds (guide §1:
   * measure first). For each named catalog entry it runs the query once
   * untimed (warm), then `reps` timed runs, and reports per-entry medians
-  * of: wall seconds, Spark job count, stage count, task count, summed
+  * of: wall seconds, the seconds of those spent building the frame before
+  * its action (`buildS`: construction-time analysis and eager work, read
+  * apart from the action), Spark job count, stage count, task count, summed
   * executor run time, GC time, shuffle bytes read/written, and bytes
   * spilled. Job/stage counts expose scheduling floors (a 2 s entry made
   * of 40 tiny jobs is a checkpoint/collect problem, not a compute
@@ -55,7 +57,7 @@ object Profile {
       val s = xs.sorted; if (s.size % 2 == 1) s(s.size / 2)
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
-    println(f"${"entry"}%-36s ${"sec"}%7s ${"jobs"}%5s ${"stg"}%5s " +
+    println(f"${"entry"}%-36s ${"sec"}%7s ${"buildS"}%7s ${"jobs"}%5s ${"stg"}%5s " +
       f"${"tasks"}%6s ${"runS"}%7s ${"gcS"}%6s ${"shR_MB"}%7s ${"shW_MB"}%7s ${"spill"}%6s")
     SparkEntry.catalog.filter(q => names.isEmpty || names.contains(q.name))
       .foreach { q =>
@@ -66,16 +68,17 @@ object Profile {
             // or in-flight task-end events bleed across reps (ADVICE r16)
             org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
             val before = acc.snap
-            val (sec, err) = Bench.timeEntry(spark, sfDir, q)
+            val (buildSec, sec, err) = Bench.timeBuildAndEntry(spark, sfDir, q)
             err.foreach(m => println(s"!! ${q.name}: $m"))
             org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
             val after = acc.snap
-            (sec, after.zip(before).map { case (a, b) => a - b })
+            (sec, buildSec, after.zip(before).map { case (a, b) => a - b })
           }
           val sec = med(runs.map(_._1))
+          val buildSec = med(runs.map(_._2))
           // per-metric median across reps
-          val ms = (0 until 8).map(i => med(runs.map(_._2(i).toDouble)))
-          println(f"${q.name}%-36s $sec%7.2f ${ms(0)}%5.0f ${ms(1)}%5.0f " +
+          val ms = (0 until 8).map(i => med(runs.map(_._3(i).toDouble)))
+          println(f"${q.name}%-36s $sec%7.2f $buildSec%7.2f ${ms(0)}%5.0f ${ms(1)}%5.0f " +
             f"${ms(2)}%6.0f ${ms(3) / 1000}%7.1f ${ms(4) / 1000}%6.2f " +
             f"${ms(5) / 1e6}%7.1f ${ms(6) / 1e6}%7.1f ${ms(7) / 1e6}%6.1f")
         } catch { case e: Throwable =>

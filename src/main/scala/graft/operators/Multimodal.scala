@@ -115,13 +115,17 @@ object Multimodal {
       struct(be32(17).as("width"), be32(21).as("height")))
   }
 
-  def wavInfo(content: Column): Column = {
-    // RIFF....WAVE; fmt chunk: channels u16 LE at offset 22, sample rate
-    // u32 LE at offset 24 (1-based 23/25). Little-endian = place-value
-    // sum over single bytes (reverse() does not take binary).
-    def le(off: Int, len: Int) = (0 until len).map(i =>
+  /** Unsigned little-endian integer of `len` bytes at 1-based byte
+    * offset `off`: a place-value sum over single bytes (reverse() does
+    * not take binary). */
+  private def le(content: Column, off: Int, len: Int): Column =
+    (0 until len).map(i =>
       conv(hex(substring(content, off + i, 1)), 16, 10).cast("long") *
         lit(1L << (8 * i))).reduce(_ + _)
+
+  def wavInfo(content: Column): Column = {
+    // RIFF....WAVE; fmt chunk: channels u16 LE at offset 22, sample rate
+    // u32 LE at offset 24 (1-based 23/25).
     // 'fmt ' chunk id at offset 12 must ALSO match: RIFF permits other
     // chunks (LIST/JUNK) before fmt, and for those layouts the fixed
     // offsets would read garbage — null out instead. (PNG needs no such
@@ -130,7 +134,8 @@ object Multimodal {
         hex(substring(content, 1, 4)) === "52494646" &&
         hex(substring(content, 9, 4)) === "57415645" &&
         hex(substring(content, 13, 4)) === "666D7420",
-      struct(le(23, 2).as("channels"), le(25, 4).as("sample_rate")))
+      struct(le(content, 23, 2).as("channels"),
+        le(content, 25, 4).as("sample_rate")))
   }
 
   /** Canonical-layout WAV duration in ms: byte rate (u32 LE at byte
@@ -143,17 +148,14 @@ object Multimodal {
     * is never within an ulp of an integer (denominator ≤ ~2M), so the
     * floor is exact and engine-portable. */
   def wavDurationMs(content: Column): Column = {
-    def le(off: Int, len: Int) = (0 until len).map(i =>
-      conv(hex(substring(content, off + i, 1)), 16, 10).cast("long") *
-        lit(1L << (8 * i))).reduce(_ + _)
     when(length(content) >= 44 &&
         hex(substring(content, 1, 4)) === "52494646" &&
         hex(substring(content, 9, 4)) === "57415645" &&
         hex(substring(content, 13, 4)) === "666D7420" &&
         hex(substring(content, 37, 4)) === "64617461" &&
-        le(29, 4) > 0,
-      floor((le(41, 4) * lit(1000L)).cast("double") / le(29, 4).cast("double"))
-        .cast("long"))
+        le(content, 29, 4) > 0,
+      floor((le(content, 41, 4) * lit(1000L)).cast("double") /
+        le(content, 29, 4).cast("double")).cast("long"))
   }
 
   /** BMP dimensions + orientation: 'BM' magic, BITMAPINFOHEADER width
@@ -164,16 +166,13 @@ object Multimodal {
     * column expression, same scan-side metadata-mining contract as
     * pngDims. */
   def bmpDims(content: Column): Column = {
-    def le(off: Int, len: Int) = (0 until len).map(i =>
-      conv(hex(substring(content, off + i, 1)), 16, 10).cast("long") *
-        lit(1L << (8 * i))).reduce(_ + _)
-    val rawH = le(23, 4)
+    val rawH = le(content, 23, 4)
     // two's-complement i32: values above 2^31 are negative heights
     val signedH = when(rawH >= lit(2147483648L), rawH - lit(4294967296L))
       .otherwise(rawH)
     when(length(content) >= 30 &&
         hex(substring(content, 1, 2)) === "424D",
-      struct(le(19, 4).as("width"),
+      struct(le(content, 19, 4).as("width"),
         abs(signedH).as("height"),
         when(signedH < 0, 1L).otherwise(0L).as("topdown")))
   }
@@ -182,13 +181,10 @@ object Multimodal {
     * height u16 LE at byte offsets 7/9 (1-based). Null struct for
     * non-GIF/corrupt payloads. */
   def gifDims(content: Column): Column = {
-    def le(off: Int, len: Int) = (0 until len).map(i =>
-      conv(hex(substring(content, off + i, 1)), 16, 10).cast("long") *
-        lit(1L << (8 * i))).reduce(_ + _)
     when(length(content) >= 13 &&
         (hex(substring(content, 1, 6)) === "474946383761" ||
           hex(substring(content, 1, 6)) === "474946383961"),
-      struct(le(7, 2).as("width"), le(9, 2).as("height")))
+      struct(le(content, 7, 2).as("width"), le(content, 9, 2).as("height")))
   }
 
   /** JPEG dimensions via a real SOF marker-segment walk (unlike PNG/WAV,

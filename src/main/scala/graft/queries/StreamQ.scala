@@ -114,11 +114,14 @@ object StreamQ {
     * returned stream reads one file per micro-batch, so slice k IS
     * micro-batch k. The file source batches by modification time, not
     * path, so each file's mtime is pinned to 1000000 + k·60000 ms: the
-    * order holds even when the writes land inside one clock tick. */
+    * order holds even when the writes land inside one clock tick. The
+    * slices are written through [[graft.io.LocalFs]], so no write starts
+    * a process. */
   private def orderedArrival(root: String, slices: Seq[DataFrame]): DataFrame = {
     val s = slices.head.sparkSession
     for ((slice, k) <- slices.zipWithIndex) {
-      slice.coalesce(1).write.mode("overwrite").parquet(s"$root/in/$k")
+      slice.coalesce(1).write.options(LocalFs.writeOptions).mode("overwrite")
+        .parquet(s"$root/in/$k")
       val files = Files.list(Paths.get(s"$root/in/$k"))
       try files.forEach(p =>
         Files.setLastModifiedTime(p, FileTime.fromMillis(1000000L + k * 60000L)))
@@ -656,7 +659,7 @@ object StreamQ {
               lit(late).as("n_late"),
               wm.map(lit(_)).getOrElse(lit(null)).cast("long").as("wm_us"),
               lit(bmx).as("bmx"))
-            .write.mode("append").parquet(audit)
+            .write.options(LocalFs.writeOptions).mode("append").parquet(audit)
           ()
         }
         .option("checkpointLocation", s"$root/ckpt").start())

@@ -1,7 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Unhex
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Multimodal
+import graft.queries.MultimodalQ
 
 /** Multimodal plumbing: schema, batch shape, deterministic stub decode,
   * frame sampling (SURVEY.md §2.11). */
@@ -180,6 +186,35 @@ class MultimodalSpec extends AnyFunSuite {
         Multimodal.gifDims(col("content")).as("gif"))
       .orderBy(col("bmp").isNull).collect()
     assert(short.forall(r => r.isNullAt(0) && r.isNullAt(1)))
+  }
+
+  /** Expression nodes in `df`'s analyzed plan, summed over its operators. */
+  private def analyzedNodes(df: DataFrame): Int = {
+    var n = 0
+    df.queryExecution.analyzed.foreach(_.expressions.foreach(_.foreach(_ => n += 1)))
+    n
+  }
+
+  test("every multimodal entry's analyzed plan stays under 5,000 expression nodes") {
+    // A header parser passed a deep payload expression inline copies it
+    // into every byte read; eager analysis of such a frame takes seconds.
+    assume(Files.isDirectory(Paths.get(sfDir)))
+    val sizes = MultimodalQ.all.flatMap { q =>
+      // an entry over an absent fixture file cannot build its frame
+      try Some(q.name -> analyzedNodes(q.run(spark, sfDir)))
+      catch { case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" => None }
+    }
+    assert(sizes.map(_._1).contains(MultimodalQ.q294_bmp_gif_dims.name))
+    val big = sizes.filter(_._2 >= 5000)
+    assert(big.isEmpty, s"analyzed plans over 5,000 expression nodes: ${big.mkString(", ")}")
+  }
+
+  test("q294 projects its payload once: no analyzed Project holds two unhex") {
+    assume(Files.isDirectory(Paths.get(sfDir)))
+    val plan = MultimodalQ.q294_bmp_gif_dims.run(spark, sfDir).queryExecution.analyzed
+    val perProject = plan.collect { case p: Project =>
+      p.projectList.map(_.collect { case u: Unhex => u }.size).sum }
+    assert(perProject.nonEmpty && perProject.forall(_ <= 1), perProject)
   }
 
   test("jpeg SOF walker: segment skip, decoys, standalone markers, corruption") {

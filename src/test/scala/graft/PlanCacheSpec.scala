@@ -79,6 +79,16 @@ class PlanCacheSpec extends AnyFunSuite {
     assert(err.isEmpty && sec >= 0.0)
   }
 
+  test("Bench.timeBuildAndEntry reads frame construction apart from the action") {
+    val slow = queries.Q("slow", None, (s, _) => {
+      import s.implicits._
+      Thread.sleep(200)
+      Seq(1, 2, 3).toDF("x")
+    })
+    val (buildSec, sec, err) = Bench.timeBuildAndEntry(spark, "unused", slow)
+    assert(err.isEmpty && buildSec >= 0.2 && buildSec <= sec, (buildSec, sec))
+  }
+
   test("Bench.multiTopicThroughput at one topic replays the envelope " +
       "pipeline and reports recs/s") {
     // Small single-topic run of the replay the bench artifact reports as
