@@ -16,7 +16,11 @@ import org.apache.spark.sql.SparkSession
   * `RawLocalFileSystem` forks `chmod` on every file create and mkdir and
   * `readlink` on every `FileContext` link-status probe: 29 processes of
   * ~3.5 ms each per streamed micro-batch. [[Raw]] does both in the JVM;
-  * files, `.crc` files and permission bits are the same. */
+  * files, `.crc` files and permission bits are the same.
+  *
+  * The pipeline's writes, the catalog's stream checkpoints ([[bind]]) and
+  * the lake's data files (`graft.sources.ParquetRowIO`, whose one loaded
+  * conf carries [[writeOptions]]) all go through it. */
 object LocalFs {
 
   /** `RawLocalFileSystem` with an in-JVM `setPermission` and link probe. */

@@ -100,6 +100,14 @@ object StreamQ {
     }
   }
 
+  /** Runs `body` on a fresh temp dir named `prefix…`, deleted after it
+    * returns: for an entry whose answer is a table, not its checkpoint. */
+  private def withTempDir(prefix: String)(body: String => Unit): Unit = {
+    val root = Files.createTempDirectory(prefix)
+    try body(root.toString)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+  }
+
   /** Run a finite streaming frame to completion into a memory sink (on
     * Spark's temporary checkpoint) and return the sink's content. */
   private def runToSink(df: DataFrame, name: String, mode: String = "append",
@@ -979,15 +987,14 @@ object StreamQ {
       s.sql(s"DROP TABLE IF EXISTS $tbl")
       s.sql(s"CREATE TABLE $tbl (bucket BIGINT, n BIGINT, sum_id BIGINT) " +
         "TBLPROPERTIES('graft.storage'='files')")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_fupsert_").toString
-      runBounded(s.readStream.format("graft.sources.GenDocs")
-          .option("rows", "24000").option("batchRows", "6000")
-          .option("slices", "4").load()
-          .groupBy(col("bucket"))
-          .agg(count(lit(1)).as("n"), sum("id").cast("long").as("sum_id")))(_
-        .outputMode("update")
-        .option("checkpointLocation", s"$root/ckpt").toTable(tbl))
+      withTempDir("graft_fupsert_")(root =>
+        runBounded(s.readStream.format("graft.sources.GenDocs")
+            .option("rows", "24000").option("batchRows", "6000")
+            .option("slices", "4").load()
+            .groupBy(col("bucket"))
+            .agg(count(lit(1)).as("n"), sum("id").cast("long").as("sum_id")))(_
+          .outputMode("update")
+          .option("checkpointLocation", s"$root/ckpt").toTable(tbl)))
       s.table(tbl).orderBy("bucket")
     })
 
@@ -1018,15 +1025,14 @@ object StreamQ {
       s.sql(s"CREATE TABLE $tbl (bucket BIGINT, n BIGINT, sum_id BIGINT) " +
         "TBLPROPERTIES('graft.storage'='files', " +
         "'graft.overlaybudget'='120')")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_bupsert_").toString
-      runBounded(s.readStream.format("graft.sources.GenDocs")
-          .option("rows", "24000").option("batchRows", "6000")
-          .option("slices", "4").load()
-          .groupBy(col("bucket"))
-          .agg(count(lit(1)).as("n"), sum("id").cast("long").as("sum_id")))(_
-        .outputMode("update")
-        .option("checkpointLocation", s"$root/ckpt").toTable(tbl))
+      withTempDir("graft_bupsert_")(root =>
+        runBounded(s.readStream.format("graft.sources.GenDocs")
+            .option("rows", "24000").option("batchRows", "6000")
+            .option("slices", "4").load()
+            .groupBy(col("bucket"))
+            .agg(count(lit(1)).as("n"), sum("id").cast("long").as("sum_id")))(_
+          .outputMode("update")
+          .option("checkpointLocation", s"$root/ckpt").toTable(tbl)))
       val st = graft.sources.FileStore.stateOf(key).get
       val bounded = graft.sources.FileStore.overlayRows(st) <=
         st.overlayBudget

@@ -7,6 +7,7 @@ import graft.ingest.{Envelope, RatecardSchema}
 import graft.pipeline.KafkaToParquet
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Structured Streaming wrapper over the same pipeline: micro-batches from a
   * MemoryStream with the Kafka-source column shape, foreachBatch applying
@@ -412,5 +413,21 @@ class StreamingSpec extends AnyFunSuite {
     val after = open()
     info(s"open fds: $before before, $after after")
     assert(after - before <= 8, s"open fds went from $before to $after over 5 runs")
+  }
+
+  test("q475 leaves no checkpoint root behind") {
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def roots(): Set[String] = {
+      val ds = Files.list(tmp)
+      try ds.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft_fupsert_")).toSet
+      finally ds.close()
+    }
+    val before = roots()
+    (1 to 2).foreach(_ =>
+      assert(graft.queries.StreamQ.q475_stream_file_upsert.run(spark, "unused")
+        .collect().length == 97))
+    val added = roots() -- before
+    assert(added.isEmpty, s"q475 left ${added.mkString(", ")}")
   }
 }
