@@ -6,7 +6,7 @@ import org.apache.avro.io.{BinaryDecoder, DecoderFactory}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,18 +25,20 @@ import scala.jdk.CollectionConverters._
   * This is a custom `Expression` rather than a UDF because (a) the spark-avro
   * module is not on this classpath, and (b) an Expression returns a typed
   * struct whose fields Catalyst can prune/push through, keeping the
-  * surrounding projection inside the optimized plan. Decode itself is
-  * CodegenFallback — the Avro reader is library code either way and the
-  * per-row cost is dominated by the binary parse, not the call boundary.
+  * surrounding projection inside the optimized plan. Its generated code
+  * calls `nullSafeEval` on this instance, as spark-avro's
+  * `AvroDataToCatalyst` does: the Avro reader is library code either way.
   */
 case class ConfluentAvroDecode(child: Expression, schemaJson: String,
     permissive: Boolean = false)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression {
 
   @transient private lazy val avroSchema: Schema =
     new Schema.Parser().parse(schemaJson)
 
-  override def dataType: DataType = AvroSchemaConverter.toSqlType(avroSchema)
+  /** Built once: the analyzer and optimizer ask for it many times. */
+  @transient override lazy val dataType: DataType =
+    AvroSchemaConverter.toSqlType(avroSchema)
   override def nullable: Boolean = true
 
   override def checkInputDataTypes()
@@ -85,6 +87,22 @@ case class ConfluentAvroDecode(child: Expression, schemaJson: String,
       val record = reader.read(null, decoder)
       AvroSchemaConverter.toCatalyst(record, avroSchema).asInstanceOf[InternalRow]
     }
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("this", this)
+    nullSafeCodeGen(ctx, ev, eval => {
+      val result = ctx.freshName("result")
+      val boxed = CodeGenerator.boxedType(dataType)
+      s"""
+        $boxed $result = ($boxed) $self.nullSafeEval($eval);
+        if ($result == null) {
+          ${ev.isNull} = true;
+        } else {
+          ${ev.value} = $result;
+        }
+      """
+    })
   }
 
   override protected def withNewChildInternal(c: Expression): Expression =

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.ConfluentAvro.confluent_avro
 import graft.ingest.{Decoders, SchemaProvider}
-import graft.io.LocalFs
+import graft.io.{LocalFs, ParquetFileSink}
 
 import java.time.{Instant, ZoneOffset}
 import java.time.format.DateTimeFormatter
@@ -25,6 +25,8 @@ final case class BatchResult(path: String, totalRecords: Long, distinctRecords: 
   *  - `writeBatch`: one file per micro-batch, epoch-stamped, counts in the
   *    filename — byte-faithful to lambda_function.py:56-116 /
   *    lambda_function_with_AWS_datawrangler.py:63-90. Used by foreachBatch.
+  *    Written through [[graft.io.ParquetFileSink]], Spark's parquet writer
+  *    without the Hadoop conf Spark's file writer ships with each task.
   *  - `writePartitionedLake`: `partitionBy(year,month,day,hour)` with no
   *    coalesce — the 100 TB shape (per-executor parallel writes, partition
   *    pruning on read). The filename contract is a single-file notion and
@@ -53,9 +55,11 @@ object KafkaToParquet {
     * {base}/{topic}/yyyy/MM/dd[/HH]/{topic}_{epochSeconds}[_{total}_{distinct}].parquet.
     * The counts are observed on the write itself (one Spark job) and name
     * the file at the rename after it. An empty batch writes no file.
-    * The write binds `file:` to [[graft.io.LocalFs]] through its options:
-    * without libhadoop, Hadoop's own local FS forks a `chmod` per create
-    * and mkdir, 9 per batch.
+    * The write goes through [[graft.io.ParquetFileSink]]: its one task
+    * gets a few string keys instead of two serialized copies of the
+    * session's ~1,100-key Hadoop conf, and writes with `file:` bound to
+    * [[graft.io.LocalFs]] (without libhadoop, Hadoop's own local FS forks a
+    * `chmod` per create and mkdir, 9 per batch).
     */
   def writeBatch(
       decoded: DataFrame,
@@ -76,9 +80,9 @@ object KafkaToParquet {
     // caps a batch at 10k records (SAM template).
     val staging = new Path(s"$dir/.staging_${java.util.UUID.randomUUID()}")
     val counts = Observation()
-    decoded.observe(counts, count(lit(1)).as("total"),
-        size(collect_set(col(distinctKeyCol))).as("distinct"))
-      .coalesce(1).write.options(LocalFs.writeOptions).parquet(staging.toString)
+    ParquetFileSink.append(decoded.observe(counts, count(lit(1)).as("total"),
+        size(collect_set(col(distinctKeyCol))).as("distinct")).coalesce(1),
+      staging.toString)
     val observed = counts.get
     val (total, distinct) = (observed("total").asInstanceOf[Long],
       observed("distinct").asInstanceOf[Int].toLong)

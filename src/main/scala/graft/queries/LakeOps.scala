@@ -21,27 +21,10 @@ object LakeOps {
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(sfDir.getBytes("UTF-8")).map(b => f"$b%02x").mkString.take(16)
     val appRoot = s"/tmp/graft_${fmt}_export/${s.sparkContext.applicationId}"
-    registerCleanup(appRoot)
+    // every run leaves a fresh root; it goes when the JVM exits
+    graft.io.ExitCleanup.register(appRoot)
     s"$appRoot/$key"
   }
-
-  /** Each process run writes its exports under a fresh per-applicationId
-    * directory (the concurrency guard above); without cleanup every run
-    * would leave one behind. One JVM shutdown hook per app root removes
-    * the whole tree on exit — registered at most once per root. */
-  private val cleanupRoots =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def registerCleanup(root: String): Unit =
-    if (cleanupRoots.add(root)) {
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles()
-          if (kids != null) kids.foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(root))
-      }))
-    }
 
   /** Snapshot diff (operators/SnapshotDiff): old = the customer table;
     * new = a deterministic mutation of it (delete keys ≡0 mod 97, +10.00

@@ -193,9 +193,13 @@ private[graft] object FileStore {
     }
   }
 
-  /** Per-JVM default lake root (catalog option `basedir` overrides). */
-  lazy val defaultBase: String =
-    java.nio.file.Files.createTempDirectory("graft-lake").toString
+  /** Per-JVM default lake root (catalog option `basedir` overrides),
+    * deleted with its tables when the JVM exits. */
+  lazy val defaultBase: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-lake").toString
+    graft.io.ExitCleanup.register(dir)
+    dir
+  }
 
   def tableDir(key: String): Option[String] =
     Option(tables.get(key)).map(_.dir)

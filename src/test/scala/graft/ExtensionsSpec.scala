@@ -61,6 +61,26 @@ class ExtensionsSpec extends AnyFunSuite {
     val ok = spark.sql(
       s"SELECT try_confluent_avro(X'0000000001046869', '$schema').x AS x").head()
     assert(ok.getString(0) == "hi")
+
+    // A literal input folds the decode at optimization. Read from
+    // `range(1)`, the same cases run in a task: under whole-stage codegen,
+    // in a generated per-operator projection, and interpreted.
+    def decode(fn: String, hex: String): org.apache.spark.sql.Row = spark.sql(
+      s"SELECT $fn(CASE WHEN id = 0 THEN X'$hex' END, '$schema') AS r FROM range(1)")
+      .head()
+    for (confs <- Seq(Nil, Seq("spark.sql.codegen.wholeStage" -> "false"),
+        Seq("spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))) {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        assert(decode("try_confluent_avro", "0000000001c801").isNullAt(0), confs)
+        intercept[Exception](decode("confluent_avro", "0000000001c801"))
+        Seq("try_confluent_avro", "confluent_avro").foreach { fn =>
+          assert(decode(fn, "0000000001046869").getStruct(0).getString(0) == "hi",
+            s"$fn $confs")
+        }
+      } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
   }
 
   test("text expressions are callable from SQL") {

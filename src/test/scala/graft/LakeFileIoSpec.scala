@@ -134,4 +134,9 @@ class LakeFileIoSpec extends AnyFunSuite {
       assert(after - before <= 8, s"open fds went from $before to $after over 40 reads")
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
+
+  test("the JVM's default lake root is removed at exit") {
+    assert(Files.isDirectory(Paths.get(FileStore.defaultBase)))
+    assert(graft.io.ExitCleanup.isRegistered(FileStore.defaultBase))
+  }
 }
