@@ -268,7 +268,7 @@ object DataOps6 {
 
   /** NATIVE ROW-LEVEL DELETE (SupportsRowLevelOperations — VERDICT r12
     * #4, the DML rung of the connector ladder): orders seeds a v2
-    * row-store table through the catalog-plugin write path, then a SQL
+    * lake table through the catalog-plugin write path, then a SQL
     * `DELETE FROM graftlake.ns...` is planned by Spark's OWN
     * `RewriteDeleteFromTable` into group-based copy-on-write
     * `ReplaceData` — the row-level operation's scan reads the group,

@@ -901,12 +901,7 @@ object GraphOps {
               |ORDER BY m.variant""".stripMargin)
     },
     (s, d) => {
-      val dbg = sys.env.contains("GRAFT_Q461_DEBUG")
-      val t00 = System.nanoTime()
-      def mark(m: String): Unit =
-        if (dbg) println(f"[q461] +${(System.nanoTime() - t00) / 1e9}%.2fs $m")
       val e = cooccurEdges(s, d)
-      mark("cooccurEdges done")
       val nb = e.select(col("a").as("u"), col("b").as("v"))
         .union(e.select(col("b").as("u"), col("a").as("v")))
       val deg = graft.operators.PlanCache.persist(nb.groupBy(col("u").as("node"))
@@ -1035,7 +1030,6 @@ object GraphOps {
         mid.foreach(_.unpersist(false))
         // near-free: scans the just-checkpointed block's blocks
         converged = next.where(col("chg")).isEmpty
-        mark(s"round=${round + steps} converged=$converged")
         lab = next
         round += steps
       }

@@ -927,9 +927,10 @@ object StreamQ {
     * (the engine-native streaming-CDC-apply): the v2 gendocs stream
     * aggregates per bucket, `outputMode("update")` emits each epoch's
     * CHANGED per-key rows, and `.toTable("graftlake...")` lands them in
-    * the catalog row store through the upsert `StreamingWrite` — one
-    * atomic keyed upsert per epoch, idempotent across epoch replays via
-    * the applied-epoch ledger (RowLevelSpec pins the guard). The final
+    * a lake table through the file store's upsert `StreamingWrite` —
+    * one atomic keyed upsert (one merge-on-read delta generation) per
+    * epoch, idempotent across epoch replays via the applied-epoch
+    * ledger (FileLakeSpec pins the guard). The final
     * table state must equal the full batch aggregation in closed form —
     * intermediate epochs' partial totals were OVERWRITTEN by later
     * upserts, so a stale/dropped/duplicated epoch breaks the sums.
@@ -939,8 +940,8 @@ object StreamQ {
     * sink's device).
     *
     * Scale shape: epoch payloads are one row per CHANGED key (the
-    * 97-bucket grid), never raw rows; store mutation is driver-side
-    * metadata, exactly the manifest-swap a lake upsert sink commits. */
+    * 97-bucket grid), never raw rows; each epoch commits one delta file
+    * per task plus one manifest swap. */
   val q467_stream_upsert = Q(
     "q467_stream_upsert",
     Some("""WITH g AS (SELECT unnest(generate_series(0, 29999)) AS id)
@@ -951,15 +952,14 @@ object StreamQ {
       val tbl = "graftlake.ns.q467_totals"
       s.sql(s"DROP TABLE IF EXISTS $tbl")
       s.sql(s"CREATE TABLE $tbl (bucket BIGINT, n BIGINT, sum_id BIGINT)")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_upsert_").toString
-      runBounded(s.readStream.format("graft.sources.GenDocs")
-          .option("rows", "30000").option("batchRows", "7500")
-          .option("slices", "4").load()
-          .groupBy(col("bucket"))
-          .agg(count(lit(1)).as("n"), sum("id").cast("long").as("sum_id")))(_
-        .outputMode("update")
-        .option("checkpointLocation", s"$root/ckpt").toTable(tbl))
+      withTempDir("graft_upsert_")(root =>
+        runBounded(s.readStream.format("graft.sources.GenDocs")
+            .option("rows", "30000").option("batchRows", "7500")
+            .option("slices", "4").load()
+            .groupBy(col("bucket"))
+            .agg(count(lit(1)).as("n"), sum("id").cast("long").as("sum_id")))(_
+          .outputMode("update")
+          .option("checkpointLocation", s"$root/ckpt").toTable(tbl)))
       s.table(tbl).orderBy("bucket")
     })
 
@@ -973,8 +973,8 @@ object StreamQ {
     * manifest swap). Exactly-once across epoch retries rides the
     * applied-epoch ledger; a replayed epoch's files never enter the
     * manifest (FileLakeSpec pins replay-skip, abort-tracelessness, and
-    * base-file byte-identity). The oracle is the same closed-form
-    * bucket grid as the memory upsert — storage can change the files,
+    * base-file byte-identity). The oracle is q467's closed-form
+    * bucket grid over a smaller feed — the file layout can change,
     * never the answer. */
   val q475_stream_file_upsert = Q(
     "q475_stream_file_upsert",
@@ -1078,19 +1078,19 @@ object StreamQ {
           col("o_orderstatus"),
           (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
             .as("cents"))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_lakesrc_").toString
-      def drain(): Unit =
-        runBounded(s.readStream.table(src)
-            .groupBy(col("o_orderstatus"))
-            .agg(count(lit(1)).as("n"),
-              sum("cents").cast("long").as("sum_cents")))(_
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/ckpt").toTable(sink))
-      rows.filter(col("o_orderkey") % 3 =!= 0).writeTo(src).append()
-      drain() // run 1: the initial snapshot
-      rows.filter(col("o_orderkey") % 3 === 0).writeTo(src).append()
-      drain() // run 2: ONLY wave 2's files; agg state resumes
+      withTempDir("graft_lakesrc_") { root =>
+        def drain(): Unit =
+          runBounded(s.readStream.table(src)
+              .groupBy(col("o_orderstatus"))
+              .agg(count(lit(1)).as("n"),
+                sum("cents").cast("long").as("sum_cents")))(_
+            .outputMode("update")
+            .option("checkpointLocation", s"$root/ckpt").toTable(sink))
+        rows.filter(col("o_orderkey") % 3 =!= 0).writeTo(src).append()
+        drain() // run 1: the initial snapshot
+        rows.filter(col("o_orderkey") % 3 === 0).writeTo(src).append()
+        drain() // run 2: ONLY wave 2's files; agg state resumes
+      }
       s.table(sink).orderBy("o_orderstatus")
     })
 
@@ -1258,16 +1258,15 @@ object StreamQ {
       val startV = graft.sources.FileStore
         .stateOf("ns.q487_sales").get.version + 1                    // = 3
       rows.filter(col("o_orderkey") % 3 === 0).writeTo(src).append() // v3
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_startv_").toString
-      runBounded(s.readStream
-          .option("startingVersion", startV.toString)
-          .table(src)
-          .groupBy(col("o_orderstatus"))
-          .agg(count(lit(1)).as("n"),
-            sum("cents").cast("long").as("sum_cents")))(_
-        .outputMode("update")
-        .option("checkpointLocation", s"$root/ckpt").toTable(sink))
+      withTempDir("graft_startv_")(root =>
+        runBounded(s.readStream
+            .option("startingVersion", startV.toString)
+            .table(src)
+            .groupBy(col("o_orderstatus"))
+            .agg(count(lit(1)).as("n"),
+              sum("cents").cast("long").as("sum_cents")))(_
+          .outputMode("update")
+          .option("checkpointLocation", s"$root/ckpt").toTable(sink)))
       s.table(sink).orderBy("o_orderstatus")
     })
 

@@ -395,12 +395,9 @@ private[sources] class GenScan(private var lo: Long, private var hi: Long,
     * are batch-only contracts and never reach here (Spark plans
     * streaming aggregates above the scan). */
   override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    if (sys.env.contains("GRAFT_GEN_DEBUG"))
-      println(s"[gendocs] toMicroBatchStream required=$required")
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new GenMicroBatchStream(lo, math.max(lo, hi), batchRows, slices, required,
       columnar)
-  }
 
   override def description(): String =
     s"GenScan id=[$lo,$hi) cols=${required.fieldNames.mkString(",")}" +

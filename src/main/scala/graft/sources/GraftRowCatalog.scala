@@ -1,41 +1,41 @@
 package graft.sources
 
 import java.util
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** In-memory V2 `TableCatalog` whose tables support Spark's NATIVE
-  * row-level operation path (`SupportsRowLevelOperations` — VERDICT r12
-  * #4, the analogue for DML of what q457–q460 proved for the read and
-  * function surfaces): `DELETE FROM graftlake.ns.t WHERE ...` is planned
-  * by Spark's own `RewriteDeleteFromTable` rule into a group-based
-  * copy-on-write `ReplaceData` — the operation's scan reads the affected
-  * groups, Catalyst keeps the surviving rows (`NOT coalesce(cond,
-  * false)`), and the operation's write REPLACES the group atomically at
-  * driver-side commit. This table models the whole table as ONE group
-  * (the minimal correct copy-on-write target); a real lakehouse table
-  * partitions groups by file/partition and prunes them with runtime
-  * filtering, but the plan shape and the commit protocol are identical.
+/** The `graftlake` V2 `TableCatalog`: every table is PARQUET FILES under
+  * `<base>/<key>/` with an atomic manifest chain (see [[FileStore]]).
+  * Its tables support Spark's NATIVE row-level operation path
+  * (`SupportsRowLevelOperations` — VERDICT r12 #4, the analogue for DML
+  * of what q457–q460 proved for the read and function surfaces):
+  * `DELETE FROM graftlake.ns.t WHERE ...` is planned by Spark's own
+  * `RewriteDeleteFromTable` rule into a group-based copy-on-write
+  * `ReplaceData` — the operation's scan reads the affected groups,
+  * Catalyst keeps the surviving rows (`NOT coalesce(cond, false)`), and
+  * the operation's write REPLACES the groups' files atomically at the
+  * driver-side manifest commit. `graft.mode`='delta' selects
+  * merge-on-read (`WriteDelta` into delta files) instead, and
+  * `graft.partitioncol` groups files by a column, prunes rewrites to the
+  * touched groups and enables metadata-only deletes.
   *
-  * Storage is driver-side metadata (rows ride `WriterCommitMessage`s,
-  * exactly like Spark's own in-memory test catalog) — the device that
-  * lets the protocol run end-to-end in one JVM; volumes stay test-scale
-  * by construction. Reference behavior modeled: the CDC/merge family
-  * (q63/q85) applies row-level mutations via foreachBatch; this catalog
-  * exercises the ENGINE-NATIVE path for the same semantics.
+  * Beyond DML the catalog serves atomic CTAS/RTAS (staged files), ALTER
+  * TABLE schema evolution, time travel (`VERSION`/`TIMESTAMP AS OF`),
+  * the change feed (`VERSION AS OF 'v1..v2'`), streaming reads and
+  * upserts, and the `CALL graftlake.system.*` maintenance procedures.
+  * Reference behavior modeled: the CDC/merge family (q63/q85) applies
+  * row-level mutations via foreachBatch; this catalog exercises the
+  * ENGINE-NATIVE path for the same semantics on the paper's parquet
+  * lake layout.
   */
 class GraftRowCatalog extends TableCatalog with SupportsNamespaces
     with StagingTableCatalog with ProcedureCatalog {
   private var catalogName: String = "graftlake"
-  // root for file-backed tables (`graft.storage`='files'); the catalog
-  // option `basedir` overrides the per-JVM temp default
+  // root for the lake's tables; the catalog option `basedir` overrides
+  // the per-JVM temp default
   private var baseDir: String = null
 
   override def initialize(name: String,
@@ -68,8 +68,7 @@ class GraftRowCatalog extends TableCatalog with SupportsNamespaces
         finally s.close()
       }
     }
-    (RowStore.tables.keySet().asScala.toArray ++
-      FileStore.tables.keySet().asScala.toArray ++ onDisk).distinct.map { k =>
+    (FileStore.tables.keySet().asScala.toArray ++ onDisk).distinct.map { k =>
       val parts = k.split('.')
       Identifier.of(parts.dropRight(1), parts.last)
     }
@@ -85,18 +84,14 @@ class GraftRowCatalog extends TableCatalog with SupportsNamespaces
 
   override def loadTable(ident: Identifier): Table = {
     val k = key(ident)
-    if (fileState(k).isDefined) return new FileBackedTable(k)
-    val st = RowStore.tables.get(k)
-    if (st == null) throw new NoSuchTableException(ident)
-    if (st.delta) new DeltaRowStoreTable(k) else new RowStoreTable(k)
+    if (fileState(k).isEmpty) throw new NoSuchTableException(ident)
+    new FileBackedTable(k)
   }
 
   /** TIME TRAVEL (`SELECT ... FROM t VERSION AS OF v`): Spark routes
-    * the version literal here; file-backed tables serve any RETAINED
-    * snapshot (every mutating commit keeps its predecessor until
-    * VACUUM), with the snapshot's own schema and files. Memory-mode
-    * tables keep no history — versioned reads are a file-store
-    * contract, like the lake formats'. */
+    * the version literal here; a table serves any RETAINED snapshot
+    * (every mutating commit keeps its predecessor until VACUUM), with
+    * the snapshot's own schema and files. */
   override def loadTable(ident: Identifier, version: String): Table = {
     val k = key(ident)
     val st = fileState(k).getOrElse(throw new NoSuchTableException(ident))
@@ -151,8 +146,13 @@ class GraftRowCatalog extends TableCatalog with SupportsNamespaces
     }
   }
 
-  private def isFileMode(properties: util.Map[String, String]): Boolean =
-    "files".equalsIgnoreCase(properties.get("graft.storage"))
+  /** TBLPROPERTIES('graft.storage') is optional and may only say
+    * 'files', the one storage there is: any other value is refused
+    * rather than silently given a different meaning. */
+  private def checkStorage(properties: util.Map[String, String]): Unit =
+    Option(properties.get("graft.storage")).foreach(v =>
+      if (!"files".equalsIgnoreCase(v)) throw new IllegalArgumentException(
+        s"graft.storage must be 'files' (or absent), got '$v'"))
 
   /** TBLPROPERTIES('graft.overlaybudget'='N') — merge-on-read overlay
     * budget in delta rows (see [[FileStore.FState.overlayBudget]]). */
@@ -167,14 +167,17 @@ class GraftRowCatalog extends TableCatalog with SupportsNamespaces
       n
     }.getOrElse(FileStore.DefaultOverlayBudget)
 
-  /** Create a PARQUET-FILE-BACKED table (`graft.storage`='files' —
-    * VERDICT r13 #1): same property surface as the memory store
-    * (`graft.mode`='delta' for merge-on-read, `graft.partitioncol` for
-    * file grouping + metadata deletes), but rows land in real parquet
-    * files under `<base>/<key>/data/` and commits publish an atomic
-    * manifest. See [[FileStore]]. */
-  private def createFileTable(ident: Identifier, schema: StructType,
+  /** Create a table (VERDICT r13 #1): `graft.mode`='delta' selects the
+    * MERGE-ON-READ row-level mode (SupportsDelta/WriteDelta; the
+    * default is group-based copy-on-write, ReplaceData), and
+    * `graft.partitioncol` opts into file grouping + METADATA-ONLY
+    * deletes (SupportsDeleteV2) for predicates aligned with that
+    * column. Rows land in real parquet files under `<base>/<key>/data/`
+    * and commits publish an atomic manifest. See [[FileStore]]. */
+  override def createTable(ident: Identifier, schema: StructType,
+      partitions: Array[Transform],
       properties: util.Map[String, String]): Table = {
+    checkStorage(properties)
     val k = key(ident)
     if (exists(k)) throw new TableAlreadyExistsException(ident)
     val delta = "delta".equalsIgnoreCase(properties.get("graft.mode"))
@@ -194,54 +197,16 @@ class GraftRowCatalog extends TableCatalog with SupportsNamespaces
     new FileBackedTable(k)
   }
 
-  override def createTable(ident: Identifier, schema: StructType,
-      partitions: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    if (isFileMode(properties))
-      return createFileTable(ident, schema, properties)
-    val k = key(ident)
-    if (exists(k)) throw new TableAlreadyExistsException(ident)
-    // TBLPROPERTIES('graft.mode'='delta') selects the MERGE-ON-READ
-    // row-level mode (SupportsDelta/WriteDelta); default is group-based
-    // copy-on-write (ReplaceData). A delta table's row id is its FIRST
-    // column, and Spark's delta rewrite rejects nullable row ids — so
-    // the key column is declared non-null here (ANSI store assignment
-    // inserts the runtime null check on writes).
-    val delta = "delta".equalsIgnoreCase(properties.get("graft.mode"))
-    val st =
-      if (!delta) schema
-      else StructType(schema.fields.zipWithIndex.map {
-        case (f, 0) => f.copy(nullable = false)
-        case (f, _) => f
-      })
-    // TBLPROPERTIES('graft.partitioncol'='c') opts the table into
-    // METADATA-ONLY deletes (SupportsDeleteV2) for predicates aligned
-    // with that column — the Iceberg partition-drop contract; every
-    // other predicate still takes the row-level rewrite.
-    val pcol = Option(properties.get("graft.partitioncol")).map { c =>
-      require(st.fieldNames.contains(c),
-        s"graft.partitioncol '$c' is not a column of $k")
-      c
-    }
-    RowStore.tables.put(k, RowStore.TableState(st, Array.empty, delta, pcol))
-    if (delta) new DeltaRowStoreTable(k) else new RowStoreTable(k)
-  }
-
   /** ALTER TABLE — schema evolution DDL (add / drop / rename column,
-    * top-level only). Rows evolve WITH the schema in one atomic state
-    * swap: ADD null-fills every existing row (the lake-format
-    * back-fill-free evolution — old files stay, readers see null),
-    * DROP removes the value slot, RENAME touches metadata only. The
-    * first column is the row-id/partition anchor (delta row id,
+    * top-level only) with NO row movement at all: data files are never
+    * rewritten. ADD appends a fresh column id (old files predate the id
+    * and null-fill at read), DROP removes the id (readers stop binding
+    * it; bytes stay in old files, exactly like a lake format), RENAME
+    * touches only the manifest (files bind columns by id, not name).
+    * The first column is the row-id/partition anchor (delta row id,
     * graft.partitioncol) and is protected. */
-  /** File-mode ALTER TABLE: the same add/drop/rename surface, but NO
-    * row movement at all — data files are never rewritten. ADD appends
-    * a fresh column id (old files predate the id and null-fill at
-    * read), DROP removes the id (readers stop binding it; bytes stay in
-    * old files, exactly like a lake format), RENAME touches only the
-    * manifest (files bind columns by id, not name). */
-  private def alterFileTable(ident: Identifier,
-      changes: Seq[TableChange]): Table = {
+  override def alterTable(ident: Identifier,
+      changes: TableChange*): Table = {
     val k = key(ident)
     val updated = FileStore.tables.computeIfPresent(k, (_, st0) => {
       val next = changes.foldLeft(st0) { (st, ch) =>
@@ -292,70 +257,33 @@ class GraftRowCatalog extends TableCatalog with SupportsNamespaces
     loadTable(ident)
   }
 
-  override def alterTable(ident: Identifier,
-      changes: TableChange*): Table = {
-    val k = key(ident)
-    if (FileStore.tables.containsKey(k)) return alterFileTable(ident, changes)
-    val updated = RowStore.tables.computeIfPresent(k, (_, st0) => {
-      changes.foldLeft(st0) { (st, ch) =>
-        def top(names: Array[String], what: String): String = {
-          require(names.length == 1,
-            s"$what: only top-level columns are supported, got " +
-              names.mkString("."))
-          names(0)
-        }
-        ch match {
-          case a: TableChange.AddColumn =>
-            val name = top(a.fieldNames(), "ADD COLUMN")
-            require(!st.schema.fieldNames.contains(name),
-              s"column $name already exists in $k")
-            require(a.isNullable,
-              "ADD COLUMN must be nullable — existing rows null-fill")
-            st.copy(
-              schema = st.schema.add(name, a.dataType(), nullable = true),
-              rows = st.rows.map(r => r :+ (null: Any)))
-          case dl: TableChange.DeleteColumn =>
-            val name = top(dl.fieldNames(), "DROP COLUMN")
-            val idx = st.schema.fieldIndex(name)
-            require(idx != 0,
-              s"cannot drop the key/anchor column $name of $k")
-            require(!st.partitionCol.contains(name),
-              s"cannot drop the partition column $name of $k")
-            st.copy(
-              schema = StructType(
-                st.schema.fields.patch(idx, Nil, 1)),
-              rows = st.rows.map(r =>
-                (r.take(idx) ++ r.drop(idx + 1)).toArray))
-          case rn: TableChange.RenameColumn =>
-            val name = top(rn.fieldNames(), "RENAME COLUMN")
-            val idx = st.schema.fieldIndex(name)
-            st.copy(
-              schema = StructType(st.schema.fields.updated(idx,
-                st.schema.fields(idx).copy(name = rn.newName()))),
-              partitionCol = st.partitionCol
-                .map(c => if (c == name) rn.newName() else c))
-          case other =>
-            throw new UnsupportedOperationException(
-              s"ALTER TABLE change not supported: $other")
-        }
-      }
-    })
-    if (updated == null) throw new NoSuchTableException(ident)
-    loadTable(ident)
-  }
-
   // --- ATOMIC CTAS / RTAS (StagingTableCatalog): Spark writes the
   // SELECT's rows into a STAGED table that is invisible to readers; only
-  // commitStagedChanges() publishes (one map put — the same driver-side
-  // atomicity point as every other write commit), and a failed write
-  // calls abortStagedChanges(), leaving a replaced table's OLD contents
-  // untouched. Without this interface Spark falls back to
+  // commitStagedChanges() publishes (one manifest swap — the same
+  // driver-side atomicity point as every other write commit), and a
+  // failed write calls abortStagedChanges(), leaving a replaced table's
+  // OLD contents untouched. Without this interface Spark falls back to
   // drop-then-create-then-write, which a mid-write failure leaves
   // half-done — the non-atomic window REPLACE TABLE AS SELECT exists to
-  // close. Shared table-property parsing with createTable. ---
-  private def stagedProps(schema: StructType,
-      properties: util.Map[String, String], k: String)
-      : (StructType, Boolean, Option[String]) = {
+  // close. ---
+
+  /** Existence consults DISK as well as the in-JVM cache: a lake table
+    * another driver created (manifest chain present, cache cold) must
+    * collide with CREATE and resolve for REPLACE/DROP exactly like a
+    * cached one (the side effect pulls it into the cache). */
+  private def exists(k: String): Boolean = fileState(k).isDefined
+
+  /** The staged table: the staged rows are real parquet files on disk
+    * that stay OUT of the manifest until commit (see
+    * [[StagedFileTable]]). A delta table's row id is its first column,
+    * and Spark's delta rewrite rejects nullable row ids — so the staged
+    * schema declares it non-null (ANSI store assignment inserts the
+    * runtime null check on writes). */
+  private def stageFile(ident: Identifier, schema: StructType,
+      properties: util.Map[String, String],
+      requireAbsent: Boolean): StagedTable = {
+    checkStorage(properties)
+    val k = key(ident)
     val delta = "delta".equalsIgnoreCase(properties.get("graft.mode"))
     val st =
       if (!delta) schema
@@ -363,29 +291,6 @@ class GraftRowCatalog extends TableCatalog with SupportsNamespaces
         case (f, 0) => f.copy(nullable = false)
         case (f, _) => f
       })
-    val pcol = Option(properties.get("graft.partitioncol")).map { c =>
-      require(st.fieldNames.contains(c),
-        s"graft.partitioncol '$c' is not a column of $k")
-      c
-    }
-    (st, delta, pcol)
-  }
-
-  /** Existence consults DISK as well as the two in-JVM maps: a lake
-    * table another driver created (manifest chain present, cache cold)
-    * must collide with CREATE and resolve for REPLACE/DROP exactly
-    * like a cached one (the side effect pulls it into the cache). */
-  private def exists(k: String): Boolean =
-    RowStore.tables.containsKey(k) || fileState(k).isDefined
-
-  /** File-mode staged table: same atomic-publish contract, but the
-    * staged rows are real parquet files on disk that stay OUT of the
-    * manifest until commit (see [[StagedFileTable]]). */
-  private def stageFile(ident: Identifier, schema: StructType,
-      properties: util.Map[String, String],
-      requireAbsent: Boolean): StagedTable = {
-    val k = key(ident)
-    val (st, delta, _) = stagedProps(schema, properties, k)
     new StagedFileTable(k, ident, s"$base/$k", st, delta,
       Option(properties.get("graft.partitioncol")), requireAbsent,
       overlayBudgetOf(properties))
@@ -394,45 +299,32 @@ class GraftRowCatalog extends TableCatalog with SupportsNamespaces
   override def stageCreate(ident: Identifier, schema: StructType,
       partitions: Array[Transform],
       properties: util.Map[String, String]): StagedTable = {
-    val k = key(ident)
-    if (exists(k)) throw new TableAlreadyExistsException(ident)
-    if (isFileMode(properties))
-      return stageFile(ident, schema, properties, requireAbsent = true)
-    val (st, delta, pcol) = stagedProps(schema, properties, k)
-    new StagedRowStoreTable(k, ident, st, delta, pcol, requireAbsent = true)
+    if (exists(key(ident))) throw new TableAlreadyExistsException(ident)
+    stageFile(ident, schema, properties, requireAbsent = true)
   }
 
   override def stageReplace(ident: Identifier, schema: StructType,
       partitions: Array[Transform],
       properties: util.Map[String, String]): StagedTable = {
-    val k = key(ident)
-    if (!exists(k)) throw new NoSuchTableException(ident)
-    if (isFileMode(properties))
-      return stageFile(ident, schema, properties, requireAbsent = false)
-    val (st, delta, pcol) = stagedProps(schema, properties, k)
-    new StagedRowStoreTable(k, ident, st, delta, pcol, requireAbsent = false)
+    if (!exists(key(ident))) throw new NoSuchTableException(ident)
+    stageFile(ident, schema, properties, requireAbsent = false)
   }
 
   override def stageCreateOrReplace(ident: Identifier, schema: StructType,
       partitions: Array[Transform],
       properties: util.Map[String, String]): StagedTable = {
-    val k = key(ident)
-    fileState(k) // warm the cache: replacing an on-disk-only table must
-                 // continue its version line, not collide at the CAS
-    if (isFileMode(properties))
-      return stageFile(ident, schema, properties, requireAbsent = false)
-    val (st, delta, pcol) = stagedProps(schema, properties, k)
-    new StagedRowStoreTable(k, ident, st, delta, pcol, requireAbsent = false)
+    fileState(key(ident)) // warm the cache: replacing an on-disk-only
+                          // table must continue its version line, not
+                          // collide at the CAS
+    stageFile(ident, schema, properties, requireAbsent = false)
   }
 
   override def dropTable(ident: Identifier): Boolean = {
     val k = key(ident)
-    RowStore.clearEpochs(k) // a re-created table starts fresh
     fileState(k) // pull an on-disk-only table into the cache: a drop
                  // must delete its manifest chain, not leave a ghost
                  // that collides with the next CREATE
-    val fileDropped = FileStore.dropTable(k)
-    RowStore.tables.remove(k) != null || fileDropped
+    FileStore.dropTable(k)
   }
 
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit =
@@ -477,58 +369,13 @@ class GraftRowCatalog extends TableCatalog with SupportsNamespaces
       cascade: Boolean): Boolean = false
 }
 
-/** The staged side of an atomic CTAS/RTAS: a write-only table whose
-  * rows land in a PRIVATE buffer — readers of the existing table never
-  * see them — until `commitStagedChanges()` publishes the whole state
-  * in one map put. `abortStagedChanges()` drops the buffer; a replaced
-  * table's old contents survive any write failure. */
-private[sources] class StagedRowStoreTable(k: String, ident: Identifier,
-    tblSchema: StructType, delta: Boolean, pcol: Option[String],
-    requireAbsent: Boolean)
-    extends StagedTable with SupportsWrite {
-  @volatile private var staged: Array[Array[Any]] = Array.empty
-  override def name(): String = s"graft_row_store_staged($k)"
-  override def schema(): StructType = tblSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder with SupportsTruncate {
-      // the staged buffer starts empty, so truncate-for-replace is a no-op
-      override def truncate(): WriteBuilder = this
-      override def build(): Write = new Write {
-        override def toBatch: BatchWrite = new BatchWrite {
-          override def createBatchWriterFactory(i: PhysicalWriteInfo)
-              : DataWriterFactory = RowStoreWriterFactory(tblSchema)
-          override def commit(messages: Array[WriterCommitMessage]): Unit =
-            staged = messages.iterator
-              .flatMap(_.asInstanceOf[RowsMsg].rows).toArray
-          override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-        }
-      }
-    }
-  override def commitStagedChanges(): Unit = {
-    val st = RowStore.TableState(tblSchema, staged, delta, pcol)
-    if (requireAbsent) {
-      // put-if-absent IS the create: a concurrent create loses cleanly
-      if (RowStore.tables.putIfAbsent(k, st) != null)
-        throw new TableAlreadyExistsException(ident)
-    } else {
-      RowStore.tables.put(k, st) // replace: one atomic swap
-      // a memory-mode REPLACE over a file-backed table of the same name
-      // retires the file snapshot (mirror of StagedFileTable's cleanup)
-      FileStore.dropTable(k)
-    }
-  }
-  override def abortStagedChanges(): Unit = staged = Array.empty
-}
-
 /** Shared interpreter for PARTITION-ALIGNED v2 predicates — the
-  * honesty gate of both metadata-delete paths (memory + file) and the
-  * file store's runtime group filter: only a plain `=` / `IN` /
-  * ALWAYS_TRUE on the named column is interpreted; anything else
-  * (wrong column, arithmetic, inequality) returns None, and the caller
-  * falls back to a full rewrite / keeps the file — so a fast path can
-  * never drop a row the predicate didn't name. */
+  * honesty gate of the metadata-delete path and the file store's
+  * runtime group filter: only a plain `=` / `IN` / ALWAYS_TRUE on the
+  * named column is interpreted; anything else (wrong column,
+  * arithmetic, inequality) returns None, and the caller falls back to a
+  * full rewrite / keeps the file — so a fast path can never drop a row
+  * the predicate didn't name. */
 private[sources] object PartPredicates {
   def matcher(
       pred: org.apache.spark.sql.connector.expressions.filter.Predicate,
@@ -567,390 +414,5 @@ private[sources] object PartPredicates {
         }
       case _ => None
     }
-  }
-}
-
-/** Driver-side row store: table key → (schema, rows as catalyst values).
-  * Mutated ONLY at driver-side write commits — the v2 atomicity point. */
-object RowStore {
-  final case class TableState(schema: StructType, rows: Array[Array[Any]],
-      delta: Boolean = false, partitionCol: Option[String] = None)
-  private[sources] val tables =
-    new java.util.concurrent.ConcurrentHashMap[String, TableState]()
-  def rowCount(key: String): Long =
-    Option(tables.get(key)).map(_.rows.length.toLong).getOrElse(-1L)
-
-  /** Applied-epoch ledger for the streaming upsert (idempotence guard):
-    * returns true iff (table, epoch) was NOT yet applied and marks it. */
-  private val appliedEpochs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Long)]()
-  private[sources] def markEpochApplied(key: String, epochId: Long): Boolean =
-    appliedEpochs.add((key, epochId))
-  def clearEpochs(key: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    appliedEpochs.asScala.filter(_._1 == key)
-      .foreach(appliedEpochs.remove)
-  }
-  def clear(): Unit = { tables.clear(); appliedEpochs.clear() }
-}
-
-private[sources] class RowStoreTable(key: String) extends Table
-    with SupportsRead with SupportsWrite with SupportsRowLevelOperations
-    with org.apache.spark.sql.connector.catalog.SupportsDeleteV2 {
-  private def state: RowStore.TableState = {
-    val s = RowStore.tables.get(key)
-    require(s != null, s"row-store table $key vanished")
-    s
-  }
-
-  /** METADATA-ONLY delete (SupportsDeleteV2 — the third row-level mode
-    * beside q463's copy-on-write and q466's merge-on-read): when every
-    * delete predicate is a plain `=` / `IN` / ALWAYS_TRUE on the
-    * table's declared `graft.partitioncol`, Spark's
-    * OptimizeMetadataOnlyDeleteFromTable replaces the whole ReplaceData
-    * rewrite with one `deleteWhere` call — no scan, no shuffle, no
-    * write-back, the partition-drop a lake format does by rewriting its
-    * manifest. `canDeleteWhere` is the honesty gate: any predicate that
-    * is not partition-aligned (wrong column, arithmetic, inequality)
-    * returns false and the DELETE takes the full rewrite, so metadata
-    * deletes can never drop a row the predicate didn't name. Opt-in per
-    * table — without the property the table behaves exactly as before
-    * (RowLevelSpec pins both paths and the opt-in rule). */
-  private def partMatcher(
-      pred: org.apache.spark.sql.connector.expressions.filter.Predicate,
-      pcol: String): Option[Any => Boolean] =
-    PartPredicates.matcher(pred, pcol)
-
-  override def canDeleteWhere(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
-      : Boolean =
-    state.partitionCol.exists(pc =>
-      predicates.forall(p => partMatcher(p, pc).isDefined))
-
-  override def deleteWhere(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
-      : Unit = {
-    // genuinely atomic read-filter-swap via compute — a read-then-put
-    // would silently drop a concurrent append commit between the state
-    // read and the put (ADVICE r13; same discipline as alterTable)
-    val updated = RowStore.tables.compute(key, (_, st) => {
-      require(st != null, s"row-store table $key vanished")
-      val pc = st.partitionCol.getOrElse(
-        throw new UnsupportedOperationException(
-          s"$key has no graft.partitioncol — metadata delete unavailable"))
-      val idx = st.schema.fieldIndex(pc)
-      val ms = predicates.map(p => partMatcher(p, pc).getOrElse(
-        throw new UnsupportedOperationException(
-          s"non-partition-aligned predicate reached deleteWhere: $p")))
-      st.copy(rows = st.rows.filterNot(r => ms.forall(m => m(r(idx)))))
-    })
-    require(updated != null, s"row-store table $key vanished")
-  }
-
-  override def truncateTable(): Boolean = {
-    RowStore.tables.compute(key, (_, st) => {
-      require(st != null, s"row-store table $key vanished")
-      st.copy(rows = Array.empty)
-    })
-    true
-  }
-  override def name(): String = s"graft_row_store($key)"
-  override def schema(): StructType = state.schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.STREAMING_WRITE, TableCapability.TRUNCATE)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new RowStoreScan(state.schema, state.rows)
-
-  /** Plain table writes APPEND (the seeding path); TRUNCATE overwrites.
-    * The STREAMING write is a KEYED UPSERT (first column = key) with an
-    * idempotent epoch guard — `writeStream.outputMode("update")
-    * .toTable(...)` lands an update-mode streaming aggregation here as
-    * one upsert batch per epoch (the streaming-CDC-apply pattern;
-    * `SupportsStreamingUpdateAsAppend` is how a keyed sink declares
-    * update-mode rows are safe to hand to its writer — Kafka's sink
-    * does the same). */
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder with SupportsTruncate
-      with org.apache.spark.sql.internal.connector.SupportsStreamingUpdateAsAppend {
-      private var replace = false
-      override def truncate(): WriteBuilder = { replace = true; this }
-      override def build(): Write = new Write {
-        override def toBatch: BatchWrite =
-          new RowStoreBatchWrite(key, state.schema, replace)
-        override def toStreaming
-            : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-          new RowStoreStreamingUpsert(key, state.schema)
-      }
-    }
-
-  /** The row-level operation: group-based (no `SupportsDelta`), so
-    * Spark's rewrite plans `ReplaceData` — scan everything (one group),
-    * write back the survivors, commit replaces. */
-  override def newRowLevelOperationBuilder(
-      info: RowLevelOperationInfo): RowLevelOperationBuilder =
-    () => new RowLevelOperation {
-      override def command(): RowLevelOperation.Command = info.command()
-      override def newScanBuilder(options: CaseInsensitiveStringMap)
-          : ScanBuilder =
-        () => new RowStoreScan(state.schema, state.rows)
-      override def newWriteBuilder(winfo: LogicalWriteInfo): WriteBuilder =
-        new WriteBuilder {
-          override def build(): Write = new Write {
-            override def toBatch: BatchWrite = {
-              if (sys.env.contains("GRAFT_RL_DEBUG"))
-                println(s"[rowlevel] write schema = ${winfo.schema()} " +
-                  s"table schema = ${state.schema}")
-              new RowStoreBatchWrite(key, state.schema, replaceAll = true)
-            }
-          }
-        }
-      override def description(): String = s"row_level_${info.command()}"
-    }
-}
-
-/** MERGE-ON-READ variant (`SupportsDelta` — the OTHER row-level mode;
-  * the default `RowStoreTable` is group-based copy-on-write): instead of
-  * rewriting whole groups, the operation emits per-row DELTAS — Spark's
-  * delta rewrite plans `WriteDelta`, projects each row into (operation,
-  * rowId [, metadata] [, data]) and calls the writer's typed
-  * `delete(meta, id)` / `update(meta, id, row)` / `insert(row)` hooks.
-  * The row id here is the table's FIRST column (the key); a lake format
-  * uses (_file, _pos) metadata instead, but the protocol — deltas ride
-  * commit messages, the driver applies them atomically — is identical.
-  * Copy-on-write rewrites groups (cheap reads, expensive writes);
-  * merge-on-read logs deltas (cheap writes, read-side merge) — exposing
-  * BOTH modes from one catalog is exactly the lakehouse trade-off. */
-private[sources] class DeltaRowStoreTable(key: String) extends Table
-    with SupportsRead with SupportsWrite with SupportsRowLevelOperations {
-  private def state: RowStore.TableState = {
-    val s = RowStore.tables.get(key)
-    require(s != null, s"row-store table $key vanished")
-    s
-  }
-  override def name(): String = s"graft_row_store_delta($key)"
-  override def schema(): StructType = state.schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new RowStoreScan(state.schema, state.rows)
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder with SupportsTruncate {
-      private var replace = false
-      override def truncate(): WriteBuilder = { replace = true; this }
-      override def build(): Write = new Write {
-        override def toBatch: BatchWrite =
-          new RowStoreBatchWrite(key, state.schema, replace)
-      }
-    }
-  override def newRowLevelOperationBuilder(
-      info: RowLevelOperationInfo): RowLevelOperationBuilder =
-    () => new RowLevelOperation with SupportsDelta {
-      override def command(): RowLevelOperation.Command = info.command()
-      override def newScanBuilder(options: CaseInsensitiveStringMap)
-          : ScanBuilder =
-        () => new RowStoreScan(state.schema, state.rows)
-      // the row id is the key column — resolved against the relation
-      // output by Spark's delta rewrite
-      override def rowId()
-          : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-        Array(org.apache.spark.sql.connector.expressions.Expressions
-          .column(state.schema.fields.head.name))
-      override def newWriteBuilder(winfo: LogicalWriteInfo): DeltaWriteBuilder =
-        new DeltaWriteBuilder {
-          override def build(): DeltaWrite = new DeltaWrite {
-            override def toBatch: DeltaBatchWrite =
-              new DeltaRowStoreBatchWrite(key, state.schema)
-          }
-        }
-      override def description(): String = s"row_level_delta_${info.command()}"
-    }
-}
-
-/** Per-task delta ledger: deleted keys, key → replacement row, inserts.
-  * Only COMMITTED tasks contribute; the driver applies all three delta
-  * kinds in one atomic `commit` — delete/update by key, then append. */
-private[sources] case class DeltaMsg(deletes: Array[Any],
-    updates: Array[(Any, Array[Any])], inserts: Array[Array[Any]])
-    extends WriterCommitMessage
-
-private[sources] class DeltaRowStoreBatchWrite(key: String,
-    schema: StructType) extends DeltaBatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DeltaWriterFactory = DeltaRowStoreWriterFactory(schema)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val ms = messages.map(_.asInstanceOf[DeltaMsg])
-    val dels = ms.iterator.flatMap(_.deletes).toSet
-    val ups = ms.iterator.flatMap(_.updates).toMap
-    val ins = ms.iterator.flatMap(_.inserts).toArray
-    RowStore.tables.compute(key, (_, st) => {
-      require(st != null, s"row-store table $key dropped mid-write")
-      val kept = st.rows.flatMap { r =>
-        val k0 = r(0)
-        if (dels.contains(k0)) None
-        else ups.get(k0).orElse(Some(r))
-      }
-      st.copy(rows = kept ++ ins)
-    })
-    ()
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-private[sources] case class DeltaRowStoreWriterFactory(schema: StructType)
-    extends DeltaWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : DeltaWriter[InternalRow] = new DeltaWriter[InternalRow] {
-    private val types = schema.fields.map(_.dataType)
-    private val keyType = types.head
-    private val dels = scala.collection.mutable.ArrayBuffer[Any]()
-    private val ups = scala.collection.mutable.ArrayBuffer[(Any, Array[Any])]()
-    private val ins = scala.collection.mutable.ArrayBuffer[Array[Any]]()
-    // projected rows wrap a REUSED buffer — copy before extracting
-    private def vals(row: InternalRow): Array[Any] = {
-      val r = row.copy()
-      types.indices.map(i => r.get(i, types(i))).toArray
-    }
-    override def delete(meta: InternalRow, id: InternalRow): Unit =
-      dels += id.copy().get(0, keyType)
-    override def update(meta: InternalRow, id: InternalRow,
-        row: InternalRow): Unit =
-      ups += ((id.copy().get(0, keyType), vals(row)))
-    override def insert(row: InternalRow): Unit = ins += vals(row)
-    override def commit(): WriterCommitMessage =
-      DeltaMsg(dels.toArray, ups.toArray, ins.toArray)
-    override def abort(): Unit = () // uncommitted deltas vanish
-    override def close(): Unit = ()
-  }
-}
-
-/** STREAMING keyed upsert into the row store — the engine-native form
-  * of the foreachBatch CDC apply (q63/q85): per-task writers buffer an
-  * epoch's rows (the update-mode streaming agg emits ≤ one row per
-  * changed key per epoch), and the driver-side `commit(epochId, msgs)`
-  * applies the batch as ONE atomic upsert keyed on the first column.
-  * Exactly-once across retries: a per-table applied-epoch ledger skips
-  * an epochId that already committed (Spark replays a failed epoch
-  * under the SAME id from the checkpoint — the idempotent-sink guard
-  * every at-least-once streaming sink needs); an abort applies
-  * nothing. */
-private[graft] class RowStoreStreamingUpsert(key: String,
-    schema: StructType)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  override def createStreamingWriterFactory(
-      info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    RowStoreEpochWriterFactory(schema)
-  override def commit(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val incoming = messages.iterator
-      .flatMap(_.asInstanceOf[RowsMsg].rows).toArray
-    RowStore.tables.compute(key, (_, st) => {
-      require(st != null, s"row-store table $key dropped mid-write")
-      if (!RowStore.markEpochApplied(key, epochId)) st // replayed epoch
-      else {
-        val ups = incoming.map(r => r(0) -> r).toMap
-        val kept = st.rows.map(r => ups.getOrElse(r(0), r))
-        val have = st.rows.map(_(0)).toSet
-        st.copy(rows = kept ++ incoming.filter(r => !have.contains(r(0))))
-      }
-    })
-    ()
-  }
-  override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-private[graft] case class RowStoreEpochWriterFactory(schema: StructType)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : DataWriter[InternalRow] =
-    RowStoreWriterFactory(schema).createWriter(partitionId, taskId)
-}
-
-/** One input partition carrying a slice of the stored rows (catalyst
-  * values; UTF8String/Decimal are Externalizable, so the slice ships). */
-private[sources] case class RowSlice(rows: Array[Array[Any]])
-    extends InputPartition
-
-private[sources] class RowStoreScan(schema: StructType,
-    rows: Array[Array[Any]], slices: Int = 4) extends Scan with Batch {
-  override def readSchema(): StructType = schema
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] = {
-    val per = math.max(1, (rows.length + slices - 1) / slices)
-    rows.grouped(per).map(RowSlice(_): InputPartition).toArray match {
-      case Array() => Array(RowSlice(Array.empty))
-      case a => a
-    }
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition)
-          : PartitionReader[InternalRow] = {
-        val data = p.asInstanceOf[RowSlice].rows
-        new PartitionReader[InternalRow] {
-          private var i = -1
-          override def next(): Boolean = { i += 1; i < data.length }
-          override def get(): InternalRow = new GenericInternalRow(data(i))
-          override def close(): Unit = ()
-        }
-      }
-    }
-}
-
-/** Rows ride the commit message (the in-memory-table device): only
-  * COMMITTED tasks contribute, and the driver's `commit` applies the
-  * whole write ATOMICALLY — append for seeding, replace for
-  * truncate/ReplaceData. */
-private[sources] case class RowsMsg(rows: Array[Array[Any]])
-    extends WriterCommitMessage
-
-private[sources] class RowStoreBatchWrite(key: String, schema: StructType,
-    replaceAll: Boolean) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DataWriterFactory = RowStoreWriterFactory(schema)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val incoming = messages.iterator
-      .flatMap(_.asInstanceOf[RowsMsg].rows).toArray
-    RowStore.tables.compute(key, (_, st) => {
-      require(st != null, s"row-store table $key dropped mid-write")
-      if (replaceAll) st.copy(rows = incoming)
-      else st.copy(rows = st.rows ++ incoming)
-    })
-    ()
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-private[sources] case class RowStoreWriterFactory(schema: StructType)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : DataWriter[InternalRow] = new DataWriter[InternalRow] {
-    private val buf = scala.collection.mutable.ArrayBuffer[Array[Any]]()
-    private val types = schema.fields.map(_.dataType)
-    override def write(record: InternalRow): Unit = {
-      // Row-level (ReplaceData) writes may carry ONE extra leading
-      // column: the rewrite projects `<op> AS __row_operation` ahead of
-      // the data columns, and ReplaceDataExec.writingTask only strips it
-      // (via ReplaceDataProjections.rowProjection) when a METADATA
-      // projection is also present — with requiredMetadataAttributes
-      // empty it falls back to the plain DataWritingSparkTask and hands
-      // the writer the raw query row (verified against the 4.1.2
-      // bytecode). The data columns always sit at the TAIL in table
-      // order, so align by offset; anything else is a real bug.
-      val off = record.numFields - types.length
-      require(off == 0 || off == 1,
-        s"row-store writer got ${record.numFields} fields for " +
-          s"${types.length}-column schema")
-      // copy out of the (reused) UnsafeRow buffer field by field
-      val r = record.copy()
-      buf += types.indices.map(i => r.get(i + off, types(i))).toArray
-    }
-    override def commit(): WriterCommitMessage = RowsMsg(buf.toArray)
-    override def abort(): Unit = () // uncommitted rows vanish
-    override def close(): Unit = ()
   }
 }

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, PlanCache}
 
 /** The operator-persist contract (PlanCache), the bench's loud-failure
-  * contract (Bench.timeEntry), the one-session-builder audit, the env
-  * parser and the one-stream-runner audit.
+  * contract (Bench.timeEntry), the one-session-builder audit, the
+  * no-debug-switch audit, the env parser and the one-stream-runner
+  * audit.
   */
 class PlanCacheSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -124,6 +125,20 @@ class PlanCacheSpec extends AnyFunSuite {
       .map(p => Paths.get("src").relativize(p).toString).toList.sorted
     assert(callers == List("main/scala/graft/Session.scala"),
       "session builders outside graft.Session:\n" + callers.mkString("\n"))
+  }
+
+  test("audit: no GRAFT_*_DEBUG env switch under src/main") {
+    // A print-only debug switch is scratch code: a run explains its cost
+    // through the metrics listener, not through ad-hoc println toggles.
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.{Files, Paths}
+    val lookup = "(?:sys\\.env|System\\.getenv)\\b.*\"GRAFT_\\w*_DEBUG\"".r
+    val hits = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (l, i) if lookup.findFirstIn(l).isDefined => s"$p:${i + 1}: ${l.trim}"
+      }).toList
+    assert(hits.isEmpty, "debug env switches:\n" + hits.mkString("\n"))
   }
 
   test("Session.envInt takes a positive integer and names the variable otherwise") {

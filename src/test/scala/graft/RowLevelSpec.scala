@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * copy-on-write rewrite (ReplaceData), not a foreachBatch emulation;
   * seeding goes through the v2 append path. Metadata-only deletes
   * (SupportsDeleteV2) exist but are OPT-IN via `graft.partitioncol`
-  * and only for partition-aligned predicates — pinned below. */
+  * and only for partition-aligned predicates — pinned below. Every
+  * table here is parquet files: the lake has one storage. */
 class RowLevelSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -100,37 +101,6 @@ class RowLevelSpec extends AnyFunSuite {
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
-  test("streaming upsert: epoch replay is skipped, later epochs overwrite by key") {
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-    import org.apache.spark.unsafe.types.UTF8String
-    val tbl = "graftlake.ns.spec_upsert"
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    spark.sql(s"CREATE TABLE $tbl (k BIGINT, v STRING)")
-    val schema = spark.table(tbl).schema
-    val sw = new graft.sources.RowStoreStreamingUpsert(s"ns.spec_upsert", schema)
-    val factory = sw.createStreamingWriterFactory(null)
-    def msg(epoch: Long, rows: (Long, String)*) = {
-      val w = factory.createWriter(0, 0L, epoch)
-      rows.foreach { case (k, v) => w.write(new GenericInternalRow(
-        Array[Any](k, UTF8String.fromString(v)))) }
-      Array(w.commit())
-    }
-    sw.commit(0L, msg(0L, 1L -> "a", 2L -> "b"))
-    // REPLAYED epoch 0 with divergent content: the applied-epoch ledger
-    // must skip it entirely (Spark re-runs a failed epoch under the
-    // same id; an at-least-once sink that re-applied would corrupt)
-    sw.commit(0L, msg(0L, 1L -> "STALE", 9L -> "STALE"))
-    // epoch 1: upsert k=1, insert k=3
-    sw.commit(1L, msg(1L, 1L -> "a2", 3L -> "c"))
-    // aborted epoch leaves no trace
-    sw.abort(2L, msg(2L, 4L -> "never"))
-    val rows = spark.table(tbl).orderBy("k")
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    assert(rows.toSeq == Seq(1L -> "a2", 2L -> "b", 3L -> "c"),
-      rows.mkString(", "))
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-  }
-
   test("mode equivalence: identical DML on cow and delta tables yields identical contents") {
     import spark.implicits._
     // the lakehouse invariant the two modes trade PERFORMANCE on, never
@@ -149,6 +119,8 @@ class RowLevelSpec extends AnyFunSuite {
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
       out
     }
+    // cow: the unpruned whole-table rewrite (no graft.partitioncol);
+    // mor: delta files under the default overlay budget
     val cow = runDml("graftlake.ns.spec_eq_cow", "")
     val mor = runDml("graftlake.ns.spec_eq_mor",
       " TBLPROPERTIES('graft.mode'='delta')")
@@ -156,16 +128,18 @@ class RowLevelSpec extends AnyFunSuite {
     // k=3 and k=6 are both seg A with k%3=0 — deleted on both paths
     assert(cow == Seq((1L, "A", 10L), (2L, "B", 40L), (4L, "C", 40L),
       (5L, "B", 100L)), cow.mkString(", "))
-    // STORAGE equivalence (r14): the same four-way law across the
-    // parquet-file-backed store — cow-on-files (group-pruned rewrite of
-    // real files) and mor-on-files (delta files) must agree with the
-    // memory modes row-for-row; storage and mode trade I/O shape only
+    // LAYOUT equivalence (r14): the same four-way law across file
+    // layouts — a group-pruned rewrite (graft.partitioncol) and a
+    // merge-on-read table whose one-row overlay budget folds the deltas
+    // at every DML commit must agree with the two above row-for-row;
+    // layout and mode trade I/O shape only
     val fcow = runDml("graftlake.ns.spec_eq_fcow",
       " TBLPROPERTIES('graft.storage'='files', 'graft.partitioncol'='seg')")
     val fmor = runDml("graftlake.ns.spec_eq_fmor",
-      " TBLPROPERTIES('graft.storage'='files', 'graft.mode'='delta')")
-    assert(fcow == cow, s"file-cow=$fcow memory=$cow")
-    assert(fmor == cow, s"file-mor=$fmor memory=$cow")
+      " TBLPROPERTIES('graft.storage'='files', 'graft.mode'='delta', " +
+        "'graft.overlaybudget'='1')")
+    assert(fcow == cow, s"pruned-cow=$fcow cow=$cow")
+    assert(fmor == cow, s"budgeted-mor=$fmor cow=$cow")
   }
 
   test("DML walker fuzz: a seeded random op sequence keeps all four " +
@@ -174,13 +148,14 @@ class RowLevelSpec extends AnyFunSuite {
     // the equivalence law above, fuzzed: appends, partial deletes,
     // value updates, PARTITION-MOVING updates (the ADVICE r14 class),
     // MERGE upserts, and mid-walk compactions — after every step all
-    // four tables must equal the model row-for-row. The files-mor
-    // table runs under a tiny overlay budget so auto-MAJOR-compaction
-    // fires repeatedly DURING the walk.
+    // four tables must equal the model row-for-row. The four configs:
+    // cow with and without graft.partitioncol (pruned vs whole-table
+    // rewrite), mor under the default and under a tiny overlay budget
+    // (so auto-MAJOR-compaction fires repeatedly DURING the walk).
     val rnd = new scala.util.Random(151515L) // seeded: replayable
     val configs = Seq(
-      ("graftlake.ns.fz_mcow", ""),
-      ("graftlake.ns.fz_mmor", " TBLPROPERTIES('graft.mode'='delta')"),
+      ("graftlake.ns.fz_cow", ""),
+      ("graftlake.ns.fz_mor", " TBLPROPERTIES('graft.mode'='delta')"),
       ("graftlake.ns.fz_fcow", " TBLPROPERTIES('graft.storage'='files'," +
         " 'graft.partitioncol'='seg')"),
       ("graftlake.ns.fz_fmor", " TBLPROPERTIES('graft.storage'='files'," +
@@ -239,7 +214,8 @@ class RowLevelSpec extends AnyFunSuite {
                |WHEN NOT MATCHED THEN INSERT (k, seg, cents)
                |  VALUES (s.k, s.seg, s.cents)""".stripMargin)
           ups.foreach { case (k, s0, c) => model(k) = (s0, c) }
-        case _ => // mid-walk maintenance on the file-backed pair
+        case _ => // mid-walk maintenance on the partitioned/budgeted pair;
+                  // the other two keep every file and delta they wrote
           spark.sql("CALL graftlake.system.compact('ns.fz_fcow')")
           spark.sql("CALL graftlake.system.compact('ns.fz_fmor')")
       }
@@ -408,5 +384,36 @@ class RowLevelSpec extends AnyFunSuite {
     spark.sql(s"TRUNCATE TABLE $tbl")
     assert(spark.table(tbl).count() == 0)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
+  }
+
+  test("a table created with no graft.storage is parquet files that reopen " +
+      "from disk; any storage but 'files' is refused") {
+    import spark.implicits._
+    import graft.sources.FileStore
+    val tbl = "graftlake.ns.spec_default_files"
+    val key = "ns.spec_default_files"
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    spark.sql(s"CREATE TABLE $tbl (k BIGINT, v STRING)")
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v").writeTo(tbl).append()
+    val dir = java.nio.file.Paths.get(FileStore.tableDir(key).get)
+    assert(dir.startsWith(java.nio.file.Paths.get(FileStore.defaultBase)),
+      s"$dir is not under the lake base ${FileStore.defaultBase}")
+    assert(java.nio.file.Files.isRegularFile(dir.resolve("manifest.json")),
+      s"no manifest under $dir")
+    FileStore.forget(key) // "driver restart": cache cold, disk intact
+    assert(FileStore.stateOf(key).isEmpty)
+    val rows = spark.table(tbl).orderBy("k")
+      .collect().map(r => (r.getLong(0), r.getString(1)))
+    assert(rows.toSeq == Seq(1L -> "a", 2L -> "b"), rows.mkString(", "))
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+
+    for (stmt <- Seq(
+        s"CREATE TABLE $tbl (k BIGINT) TBLPROPERTIES('graft.storage'='memory')",
+        s"CREATE TABLE $tbl TBLPROPERTIES('graft.storage'='memory') " +
+          "AS SELECT id AS k FROM range(1)")) {
+      val e = intercept[IllegalArgumentException](spark.sql(stmt))
+      assert(e.getMessage.contains("graft.storage"), e.getMessage)
+    }
+    assert(!spark.catalog.tableExists(tbl), "a refused CREATE left a table")
   }
 }

@@ -415,19 +415,31 @@ class StreamingSpec extends AnyFunSuite {
     assert(after - before <= 8, s"open fds went from $before to $after over 5 runs")
   }
 
-  test("q475 leaves no checkpoint root behind") {
-    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    def roots(): Set[String] = {
-      val ds = Files.list(tmp)
-      try ds.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("graft_fupsert_")).toSet
-      finally ds.close()
+  // (entry, temp-root prefix, answer rows, reads the sf tables): each
+  // entry's answer is its lake table, so its checkpoint root goes
+  for ((e, prefix, rows, readsTables) <- Seq(
+      (graft.queries.StreamQ.q475_stream_file_upsert, "graft_fupsert_", 97, false),
+      (graft.queries.StreamQ.q467_stream_upsert, "graft_upsert_", 97, false),
+      (graft.queries.StreamQ.q483_stream_lake_source, "graft_lakesrc_", 3, true),
+      (graft.queries.StreamQ.q487_stream_lake_starting_version, "graft_startv_",
+        3, true))) {
+    val short = e.name.takeWhile(_ != '_')
+    test(s"$short leaves no checkpoint root behind") {
+      val sf = "/root/testdata/sf0.001"
+      assume(!readsTables || Files.isDirectory(java.nio.file.Paths.get(sf)))
+      val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+      def roots(): Set[String] = {
+        val ds = Files.list(tmp)
+        try ds.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith(prefix)).toSet
+        finally ds.close()
+      }
+      val before = roots()
+      (1 to 2).foreach(_ =>
+        assert(e.run(spark, if (readsTables) sf else "unused")
+          .collect().length == rows))
+      val added = roots() -- before
+      assert(added.isEmpty, s"$short left ${added.mkString(", ")}")
     }
-    val before = roots()
-    (1 to 2).foreach(_ =>
-      assert(graft.queries.StreamQ.q475_stream_file_upsert.run(spark, "unused")
-        .collect().length == 97))
-    val added = roots() -- before
-    assert(added.isEmpty, s"q475 left ${added.mkString(", ")}")
   }
 }
